@@ -14,6 +14,15 @@ Scale notes: every job is watermark-bounded so state stores stay O(live
 windows / live keys), not O(history). On a cluster the file source
 becomes Kafka and the memory sink becomes a Delta/parquet sink via
 ``foreachBatch`` (T8 shows that path); checkpoint dirs give exactly-once.
+
+State sizing: every query starts through ``_start``, which gives it one
+state partition per core (``spark.sql.shuffle.partitions`` =
+``defaultParallelism``, the total executor core count on a cluster).
+Stateful operators never get AQE coalescing, so the batch default (32
+here, 200 in a default session) would run that many state-store tasks,
+each with its own commit, in every micro-batch. The count is fixed for
+each fresh checkpoint: its offset log records it and a restart from the
+same checkpoint keeps it.
 """
 
 from __future__ import annotations
@@ -21,10 +30,12 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from lens_warehouse_spark.catalog import table
 from lens_warehouse_spark.operators._helpers import as_ts, staged_dir
@@ -58,28 +69,57 @@ def _await(q, timeout_sec: int) -> None:
         )
 
 
-def _run_to_table(stream_df: DataFrame, name: str) -> DataFrame:
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_START_LOCK = threading.Lock()
+
+
+def _start(writer: DataStreamWriter, **conf: str) -> StreamingQuery:
+    """Start ``writer`` with one state partition per core plus ``conf``,
+    then restore the session's previous values.
+
+    ``start()`` clones the session conf into the query, so the override
+    reaches this query only; the lock keeps two threads' overrides from
+    interleaving. The shuffle partition count is the state partition
+    count because stateful operators get no AQE coalescing."""
+    spark = writer._spark
+    conf = {
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+        **conf,
+    }
+    with _START_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            return writer.start()
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def _run_to_table(
+    stream_df: DataFrame, name: str, output_mode: str = "append", **conf: str
+) -> DataFrame:
     """Execute a streaming frame with availableNow into a memory sink and
-    return the materialized result."""
+    return the materialized result. The per-run temp view and checkpoint
+    dir are released in a finally: a TimeoutError from _await or a failed
+    start must leak neither."""
     spark = stream_df.sparkSession
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(tempfile.gettempdir(), "lws_ckpt", qname)
-    q = (
+    writer = (
         stream_df.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
+        .outputMode(output_mode)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
-    # Materialize, then release the per-run residue: without this every
-    # invocation leaks one memory-sink temp view into the session
-    # catalog and one checkpoint dir into /tmp (a bench best-of-3 loop
-    # grows both without bound). The release lives in a finally (r8
-    # adversarial pass): a TimeoutError from _await used to leak BOTH —
-    # the orphaned lws_ckpt/* dirs observed in /tmp were exactly this.
     try:
-        _await(q, 300)
+        _await(_start(writer, **conf), 300)
         return spark.table(qname).localCheckpoint(eager=True)
     finally:
         spark.catalog.dropTempView(qname)
@@ -164,7 +204,9 @@ ORDER BY a.win_start_ms, a.event_type
 """
 
 
-def _t4_stream_result(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _t4_stream_result(
+    spark: SparkSession, sf_dir: str, name: str, **conf: str
+) -> DataFrame:
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = (
         ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
@@ -173,7 +215,7 @@ def _t4_stream_result(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             F.unix_millis(F.col("w.start")).alias("win_start_ms"), "event_type", "n"
         )
     )
-    return _run_to_table(agg, name)
+    return _run_to_table(agg, name, **conf)
 
 
 def _t4_batch_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,25 +378,8 @@ def t7_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = f"t7_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), "lws_ckpt", qname)
-    q = (
-        stateful.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # keep the last update per user (final state); materialize and
-    # release the per-run temp view + checkpoint in a finally (see
-    # _run_to_table — a timeout must not leak them)
-    try:
-        _await(q, 300)
-        out = spark.table(qname).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(qname)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # keep the last update per user (final state)
+    out = _run_to_table(stateful, "t7", output_mode="update")
     stream_final = out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("max_value").alias("max_value")
     )
@@ -397,11 +422,10 @@ def t8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).partitionBy("event_type").parquet(os.path.join(out_dir, "data"))
 
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    q = (
+    q = _start(
         ev.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
     # finally-cleanup (r8): dozens of orphaned lws_t8_* run dirs in
     # /tmp were timeouts/failures skipping the rmtree below
@@ -523,18 +547,7 @@ def t9_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register("t4b_stream_tumbling_rocksdb", oracle=_T4_ORACLE)
 def t4b_stream_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream_out = _t4_stream_result(spark, sf_dir, "t4b")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    stream_out = _t4_stream_result(spark, sf_dir, "t4b", **{_PROVIDER: _ROCKSDB})
     batch = _t4_batch_closed(spark, sf_dir)
     return _certify_equals_batch(
         stream_out, batch, ["win_start_ms", "event_type", "n"]
@@ -566,22 +579,7 @@ def t10_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("startTimestamp", 0)
         .load()
     )
-    qname = f"t10_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), "lws_ckpt", qname)
-    q = (
-        src.select("value")
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q, 300)
-    out = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out.agg(
+    return _run_to_table(src.select("value"), "t10").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
@@ -655,42 +653,18 @@ def t7b_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    # transformWithState requires the RocksDB state-store provider.
-    # Save/restore like t4b: leaving it set would silently switch EVERY
-    # later streaming job in the session to RocksDB (and break the
-    # provider-equivalence test's conf assertion).
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ev = _events_stream(spark, sf_dir).select("user_id", "value")
+    stateful = ev.groupBy("user_id").transformWithStateInPandas(
+        UserStats(),
+        outputStructType=out_schema,
+        outputMode="Update",
+        timeMode="None",
     )
-    try:
-        ev = _events_stream(spark, sf_dir).select("user_id", "value")
-        stateful = ev.groupBy("user_id").transformWithStateInPandas(
-            UserStats(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        qname = f"t7b_{uuid.uuid4().hex[:8]}"
-        ckpt = os.path.join(tempfile.gettempdir(), "lws_ckpt", qname)
-        q = (
-            stateful.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q, 300)
-        out = spark.table(qname).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(qname)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    # transformWithState requires the RocksDB state-store provider; it
+    # goes to this query only, never the session.
+    out = _run_to_table(
+        stateful, "t7b", output_mode="update", **{_PROVIDER: _ROCKSDB}
+    )
     return (
         out.groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"), F.max("max_value").alias("max_value"))
@@ -855,12 +829,11 @@ def t13_stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         top.write.mode("append").parquet(os.path.join(out_dir, "data"))
 
-    q = (
+    q = _start(
         counts.writeStream.foreachBatch(rank_batch)
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
     try:
         _await(q, 300)
@@ -1000,11 +973,10 @@ def cdc_apply_stream(
             .parquet(src)
         )
     changes = to_changes(src_stream)
-    q = (
+    q = _start(
         changes.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
     try:
         _await(q, 300)
@@ -1143,22 +1115,11 @@ def t17_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = f"t17_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), "lws_ckpt", qname)
-    q = (
-        stateful.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q, 300)
     candidates = (
-        spark.table(qname).select("user_id").distinct().localCheckpoint(eager=True)
+        _run_to_table(stateful, "t17", output_mode="update")
+        .select("user_id")
+        .distinct()
     )
-    spark.catalog.dropTempView(qname)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     # Exact recount epilogue (batch over the same staged data the stream
     # read): superset-in, exact-out.
@@ -1276,11 +1237,10 @@ def t18_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFram
         .parquet(staged)
         .select("doc_id", "text")
     )
-    q = (
+    q = _start(
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
     try:
         _await(q, 600)

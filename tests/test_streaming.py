@@ -5,6 +5,7 @@ same data through readStream + availableNow == the batch plan.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from lens_warehouse_spark import registry
 
@@ -377,3 +378,162 @@ def test_t7b_gate_direction_matches_environment():
     assert ("t7b_transform_with_state" in registry.QUERIES) == has, (
         "t7b registration disagrees with protobuf availability"
     )
+
+
+class _StateOperators(StreamingQueryListener):
+    """Records (query name, state operator progress) for every progress
+    report."""
+
+    def __init__(self) -> None:
+        self.ops: list = []
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        for op in event.progress.stateOperators:
+            self.ops.append((event.progress.name, op))
+
+
+def test_stateful_streams_get_one_state_partition_per_core(spark):
+    """Every stateful operator runs defaultParallelism state partitions,
+    not the session's batch shuffle default (8 here); the override and
+    t4b's RocksDB provider reach the query only, never the session."""
+    import time
+
+    from lens_warehouse_spark.streaming.jobs import _PROVIDER
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = _StateOperators()
+    spark.streams.addListener(listener)
+    names = ("t4", "t5", "t7", "t4b")
+    try:
+        registry.QUERIES["t4_stream_tumbling_watermark"](spark, SF).collect()
+        registry.QUERIES["t5_stream_dedup"](spark, SF).collect()
+        registry.QUERIES["t7_stateful_user_stats"](spark, SF).collect()
+        registry.QUERIES["t4b_stream_tumbling_rocksdb"](spark, SF).collect()
+        deadline = time.monotonic() + 60  # progress events arrive async
+        while time.monotonic() < deadline and not all(
+            any(q.rsplit("_", 1)[0] == n for q, _ in listener.ops) for n in names
+        ):
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+    by_job: dict = {}
+    for q, op in listener.ops:
+        by_job.setdefault(q.rsplit("_", 1)[0], []).append(op)
+    assert set(names) <= set(by_job), sorted(by_job)
+    cores = spark.sparkContext.defaultParallelism
+    for n in names:
+        assert {op.numShufflePartitions for op in by_job[n]} == {cores}, n
+
+    def rocksdb(ops) -> bool:
+        return any(k.startswith("rocksdb") for op in ops for k in op.customMetrics)
+
+    assert rocksdb(by_job["t4b"]) and not rocksdb(by_job["t4"])
+    assert before == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(_PROVIDER, None) is None
+
+
+def test_start_restores_session_conf_when_start_raises(spark):
+    """_start sets the per-query confs only for the duration of start()
+    and restores the session's values even when start() raises."""
+    import pytest
+
+    from lens_warehouse_spark.streaming.jobs import _PROVIDER, _ROCKSDB, _start
+
+    class FailingWriter:
+        _spark = spark
+
+        def start(self):
+            self.seen = (
+                spark.conf.get("spark.sql.shuffle.partitions"),
+                spark.conf.get(_PROVIDER, None),
+            )
+            raise RuntimeError("start failed")
+
+    writer = FailingWriter()
+    with pytest.raises(RuntimeError, match="start failed"):
+        _start(writer, **{_PROVIDER: _ROCKSDB})
+    assert writer.seen == (str(spark.sparkContext.defaultParallelism), _ROCKSDB)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get(_PROVIDER, None) is None
+
+
+def test_memory_sink_timeout_leaves_no_view_or_checkpoint(spark, monkeypatch):
+    """A TimeoutError while t10 or t17 runs must still drop the
+    memory-sink temp view and remove the lws_ckpt/<qname> dir."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from lens_warehouse_spark.streaming import jobs
+
+    def timed_out(q, timeout_sec):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.name!r} still running")
+
+    monkeypatch.setattr(jobs, "_await", timed_out)
+    root = os.path.join(tempfile.gettempdir(), "lws_ckpt")
+
+    def residue(prefix):
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        dirs = set(os.listdir(root)) if os.path.isdir(root) else set()
+        return {n for n in views | dirs if n.startswith(prefix)}
+
+    for name, prefix in (
+        ("t10_rate_source", "t10_"),
+        ("t17_stream_heavy_hitters", "t17_"),
+    ):
+        before = residue(prefix)
+        with pytest.raises(TimeoutError):
+            registry.QUERIES[name](spark, SF)
+        assert residue(prefix) == before, name
+
+
+def test_start_overrides_do_not_interleave_across_threads(spark):
+    """Concurrent _start calls each see only their own overrides inside
+    start(), and the session ends with its own values."""
+    import sys
+    import threading
+
+    from lens_warehouse_spark.streaming.jobs import _start
+
+    key = "spark.lws.test.owner"
+    seen: list = []
+
+    class Writer:
+        _spark = spark
+
+        def __init__(self, owner: str) -> None:
+            self.owner = owner
+
+        def start(self):
+            seen.append(spark.conf.get(key, None) == self.owner)
+
+    def worker(i: int) -> None:
+        for j in range(10):
+            _start(Writer(f"{i}.{j}"), **{key: f"{i}.{j}"})
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 80 and all(seen)
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
