@@ -124,9 +124,12 @@ class LensWarehouse:
         return cohort_count(query, self.spark, self.sf_dir, strategy)
 
     def cohort_facets(
-        self, query: CohortQuery, facet_col: str = "c_mktsegment"
+        self,
+        query: CohortQuery,
+        facet_col: str = "c_mktsegment",
+        strategy: str = "tagged",
     ) -> DataFrame:
-        return cohort_facets(query, self.spark, self.sf_dir, facet_col)
+        return cohort_facets(query, self.spark, self.sf_dir, facet_col, strategy)
 
     # -- dedup pipeline ----------------------------------------------------
     def dedup_exact(self) -> DataFrame:

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lens_warehouse_spark.engine import LensWarehouse
 from lens_warehouse_spark.operators.cohort_queries import EXAMPLE_COHORT
+from lens_warehouse_spark.operators.wire import cohort_from_json
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,11 +35,47 @@ def test_engine_surface(spark):
     assert sess1s.count() >= sess30.count() > 0
     n_events = lw.table("events").count()
     assert sess30.agg({"n_events": "sum"}).first()[0] == n_events
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         lw.sessionize("30 fortnights")
     assert lw.simhashes().count() == 500
+
+
+# A lineitem quantity band OR'd with a subject segment, minus an order
+# exclusion: every atom kind, on both sides of the CNF.
+LINEITEM_EXCLUSION_JSON = {
+    "include": [
+        [
+            {"type": "lineitem", "returnflags": ["A", "N"],
+             "min_quantity": 10.0, "max_quantity": 30.0},
+            {"type": "subject", "segments": ["BUILDING"]},
+        ],
+        [{"type": "order", "date_from": "1993-01-01", "date_to": "1998-01-01"}],
+    ],
+    "exclude": [{"type": "order", "priorities": ["5-LOW"]}],
+}
+
+
+@pytest.mark.parametrize(
+    "query",
+    [EXAMPLE_COHORT, cohort_from_json(LINEITEM_EXCLUSION_JSON)],
+    ids=["example", "lineitem_exclusion"],
+)
+def test_cohort_facets_strategy_passes_through(spark, query):
+    lw = LensWarehouse(spark, SF)
+    facets = {
+        s: [tuple(r) for r in lw.cohort_facets(query, strategy=s).collect()]
+        for s in ("tagged", "fused", "auto")
+    }
+    assert facets["tagged"]
+    assert facets["fused"] == facets["tagged"] == facets["auto"]
+    # the argument reaches the compiler: the two strategies plan differently
+    plans = {
+        s: lw.cohort_facets(query, strategy=s)._jdf.queryExecution().optimizedPlan().toString()
+        for s in ("tagged", "fused")
+    }
+    assert plans["tagged"] != plans["fused"]
+    n = lw.cohort_count(query).collect()[0].n_subjects
+    assert sum(n_subjects for _, n_subjects in facets["tagged"]) == n
 
 
 def test_engine_curation_surface(spark):
@@ -56,9 +94,7 @@ def test_engine_curation_surface(spark):
     cont7 = lw.decontaminate(bench_mod=7)
     assert cont7.filter(F.col("doc_id") % 7 == 0).count() == 0
     assert cont7.count() != cont.count()
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         lw.decontaminate(bench_mod=0)  # would be ANSI DIVIDE_BY_ZERO
     cur = lw.curate()
     assert cur.columns == ["lang", "source", "n_docs", "total_chars"]
