@@ -50,6 +50,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Codegen class cache (default 100): ~300/bench round, ~2,830/registry, +20-22 MB metaspace.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # AQE numbers codegen stages in stage-completion order, so the ids
+        # vary from run to run; with them in the class name an unchanged
+        # plan missed the cache and recompiled 2-10 classes per stream round.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Parquet reader discipline (see catalog._ensure_reader_conf —
         # the catalog re-applies these for driver-provided sessions):
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

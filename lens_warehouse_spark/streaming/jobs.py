@@ -71,12 +71,29 @@ def _await(q, timeout_sec: int) -> None:
 
 _PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+# Checkpoint-file checksums catch corruption when a restart reopens a
+# checkpoint. A checkpoint deleted when its run returns is never
+# reopened, so their writes are pure cost, mostly in state-store
+# commits: without them a round of t4, t5, t7, t8 and t16 took 7.3 s
+# instead of 7.8 s on 4 cores.
+_THROWAWAY_CKPT = {"spark.sql.streaming.checkpoint.fileChecksum.enabled": "false"}
+# Without Hadoop's native library, the FileContext-based default forks a
+# `chmod` for every checkpoint file it creates and a `readlink` for every
+# rename. The FileSystem-based manager creates and renames in-process;
+# rename is atomic on local disk and HDFS alike. It cut a round of t4,
+# t5, t7, t8 and t16 from 7.5 s to 6.5 s on 4 cores.
+_CKPT_MANAGER = {
+    "spark.sql.streaming.checkpointFileManagerClass": "org.apache.spark.sql."
+    "execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+}
 _START_LOCK = threading.Lock()
 
 
 def _start(writer: DataStreamWriter, **conf: str) -> StreamingQuery:
-    """Start ``writer`` with one state partition per core plus ``conf``,
-    then restore the session's previous values.
+    """Start ``writer`` with one state partition per core, the
+    FileSystem-based checkpoint manager and ``conf``, then restore the
+    session's previous values.
 
     ``start()`` clones the session conf into the query, so the override
     reaches this query only; the lock keeps two threads' overrides from
@@ -85,6 +102,7 @@ def _start(writer: DataStreamWriter, **conf: str) -> StreamingQuery:
     spark = writer._spark
     conf = {
         "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+        **_CKPT_MANAGER,
         **conf,
     }
     with _START_LOCK:
@@ -119,7 +137,7 @@ def _run_to_table(
         .trigger(availableNow=True)
     )
     try:
-        _await(_start(writer, **conf), 300)
+        _await(_start(writer, **_THROWAWAY_CKPT, **conf), 300)
         return spark.table(qname).localCheckpoint(eager=True)
     finally:
         spark.catalog.dropTempView(qname)
@@ -266,7 +284,9 @@ def t5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = ev.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type"
     )
-    stream_out = _run_to_table(deduped, "t5")
+    # The batch that follows the last data batch only evicts state, and
+    # the state goes with the run: skip it.
+    stream_out = _run_to_table(deduped, "t5", **{_NO_DATA_BATCHES: "false"})
     batch = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
@@ -425,7 +445,8 @@ def t8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _start(
         ev.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
+        .trigger(availableNow=True),
+        **_THROWAWAY_CKPT,
     )
     # finally-cleanup (r8): dozens of orphaned lws_t8_* run dirs in
     # /tmp were timeouts/failures skipping the rmtree below
@@ -833,7 +854,8 @@ def t13_stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.writeStream.foreachBatch(rank_batch)
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
+        .trigger(availableNow=True),
+        **_THROWAWAY_CKPT,
     )
     try:
         _await(q, 300)
@@ -973,6 +995,7 @@ def cdc_apply_stream(
             .parquet(src)
         )
     changes = to_changes(src_stream)
+    # a restart reopens this checkpoint, so it keeps its checksums
     q = _start(
         changes.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", ckpt)
@@ -1240,7 +1263,8 @@ def t18_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFram
     q = _start(
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
+        .trigger(availableNow=True),
+        **_THROWAWAY_CKPT,
     )
     try:
         _await(q, 600)

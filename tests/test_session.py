@@ -47,6 +47,25 @@ def test_codegen_cache_sized_to_working_set(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
 
 
+def test_codegen_stage_id_does_not_split_the_cache(spark):
+    """AQE numbers codegen stages in completion order, so one plan can
+    get different stage ids from run to run. Two stages that differ only
+    in their id must share one compiled class: the union's second,
+    identical stage compiles nothing the first did not."""
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+
+    def stage(salt: int):
+        return spark.range(50).selectExpr(f"id * 7919 + {salt} AS x").filter("x % 3 = 1")
+
+    before = _compilations(spark)
+    stage(104723).collect()
+    alone = _compilations(spark) - before
+    before = _compilations(spark)
+    twice = stage(104729)
+    twice.union(twice).collect()
+    assert _compilations(spark) - before == alone
+
+
 def test_repeated_working_set_compiles_nothing(spark, sf_dir):
     _run_working_set(spark, sf_dir)
     assert _run_working_set(spark, sf_dir) == 0

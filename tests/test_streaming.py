@@ -537,3 +537,72 @@ def test_start_overrides_do_not_interleave_across_threads(spark):
     assert len(seen) == 80 and all(seen)
     assert spark.conf.get(key, None) is None
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+class _Batches(StreamingQueryListener):
+    """Counts progress reports (one per micro-batch) by query name."""
+
+    def __init__(self) -> None:
+        self.names: list = []
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.names.append(event.progress.name)
+
+
+def test_throwaway_checkpoints_skip_checksums_and_t5_its_eviction_batch(
+    spark, monkeypatch
+):
+    """A checkpoint removed when its run returns gets no checkpoint-file
+    checksums (Spark writes ``<file>.crc`` beside each file it guards),
+    while its state files are still written. t5 runs one micro-batch: the
+    batch after it would only evict state that the run then discards.
+    t4 keeps its second batch, which emits the windows the final
+    watermark closes."""
+    import os
+    import shutil
+    import time
+
+    from lens_warehouse_spark.streaming import jobs
+
+    removed: dict = {}
+    real_rmtree = shutil.rmtree
+
+    def snapshot_then_remove(path, *args, **kwargs):
+        if os.path.basename(os.path.dirname(str(path))) == "lws_ckpt":
+            removed[os.path.basename(str(path)).rsplit("_", 1)[0]] = [
+                f for _, _, files in os.walk(path) for f in files
+            ]
+        return real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(jobs.shutil, "rmtree", snapshot_then_remove)
+    listener = _Batches()
+    spark.streams.addListener(listener)
+    try:
+        rows = registry.QUERIES["t5_stream_dedup"](spark, SF).collect()
+        registry.QUERIES["t4_stream_tumbling_watermark"](spark, SF).collect()
+        deadline = time.monotonic() + 60  # progress events arrive async
+        while time.monotonic() < deadline and not {"t4", "t5"} <= {
+            n.rsplit("_", 1)[0] for n in listener.names
+        }:
+            time.sleep(0.2)
+        time.sleep(1.0)
+    finally:
+        spark.streams.removeListener(listener)
+    assert rows and all(r.equals_batch for r in rows)
+    batches = [n.rsplit("_", 1)[0] for n in listener.names]
+    assert batches.count("t5") == 1
+    assert batches.count("t4") == 2
+    for name in ("t4", "t5"):
+        files = removed[name]
+        assert any(f.endswith(".delta") for f in files), (name, files)
+        checksums = [f for f in files if f.endswith(".crc") and not f.startswith(".")]
+        assert checksums == [], (name, checksums)
