@@ -34,22 +34,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-def _already_checked() -> set[str]:
-    """Query names that earned a row in any prior round's driver check."""
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                seen |= set(json.load(fh))
-        except Exception:
-            pass
-    return seen
-
-
-def _failed_last_check() -> set[str]:
-    """Names whose MOST RECENT driver row was a hard error (err set and
-    not the rows-only 'no_oracle' marker) — these must jump the queue
-    so a fix is re-verified the very next round (l34, round 6)."""
+def _driver_rows() -> dict[str, tuple[int, bool]]:
+    """``{name: (latest driver round, whether that row failed)}``, parsing
+    each CORRECTNESS_r*.json once. Malformed files are skipped; the
+    rows-only ``no_oracle`` marker is not a failure."""
     latest: dict[str, tuple[int, bool]] = {}
     for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
         m = re.search(r"_r(\d+)\.json$", path)
@@ -61,84 +49,23 @@ def _failed_last_check() -> set[str]:
                 rows = json.load(fh)
         except Exception:
             continue
+        if not isinstance(rows, dict):
+            continue
         for name, row in rows.items():
-            bad = bool(isinstance(row, dict) and row.get("err") not in (None, "no_oracle"))
+            bad = isinstance(row, dict) and row.get("err") not in (None, "no_oracle")
             if name not in latest or rnd > latest[name][0]:
                 latest[name] = (rnd, bad)
-    return {n for n, (_, bad) in latest.items() if bad}
-
-
-def _latest_round_by_name() -> dict[str, int]:
-    """Latest driver round that sampled each query name."""
-    latest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except Exception:
-            continue
-        for name in rows:
-            latest[name] = max(latest.get(name, 0), rnd)
     return latest
 
 
-def _git_commit_time(path: str) -> int:
-    """Unix time of the last commit touching ``path`` (0 if unknown)."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", _HERE, "log", "-1", "--format=%ct", "--", path],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout.strip()
-        return int(out) if out else 0
-    except Exception:
-        return 0
-
-
-def _dirty_files() -> set[str]:
-    """Repo-relative paths with uncommitted modifications."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", _HERE, "status", "--porcelain"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout
-        return {line[3:].strip() for line in out.splitlines() if line.strip()}
-    except Exception:
-        return set()
-
-
 def _fn_hash_stale(names: list[str], latest: dict[str, int]) -> set[str]:
-    """FUNCTION-granularity rewrite detection (r12, replacing module
-    commit times in the fast lane): a name is stale iff its OWN query
-    function's source hash changed since its last driver row, per the
-    committed tools/query_src_hashes.json ledger (maintained by
-    tools/update_src_hashes.py; test_survey_coverage pins freshness).
-    Two triggers: the ledger's recorded change-round postdates the
-    name's last driver row, or the runtime hash disagrees with the
-    ledger entirely (uncommitted/unledgered edit — conservative
-    resample). ``latest`` is the caller's name->last-driver-round map
-    (r12 review: recomputing it here re-parsed every CORRECTNESS
-    artifact a fifth time per ordering call). Any failure -> empty
-    set; the manually-curated verdict_resample dict still covers
-    helper-level rewrites a function hash cannot see."""
+    """Names whose own query function changed since their last driver row,
+    per the tools/query_src_hashes.json ledger (tools/update_src_hashes.py):
+    the ledger's change round postdates the row, or the live hash
+    disagrees with the ledger (an unledgered edit). ``latest`` maps name ->
+    last driver round. Any failure -> empty set."""
     try:
-        # Shared hasher (r12 advice): re-implementing dedent+sha1 here
-        # risked silent divergence from the ledger writer — if either
-        # side's hashing drifted, every checked query would land in
-        # the fn_stale fast lane unnoticed. One definition now; a test
-        # (tests/test_coverage_order.py) pins that the ledger's stored
-        # hashes round-trip through this exact function.
+        # One hasher shared with the ledger writer, so the two cannot drift.
         from tools.update_src_hashes import fn_hash
 
         with open(os.path.join(_HERE, "tools", "query_src_hashes.json")) as fh:
@@ -146,15 +73,10 @@ def _fn_hash_stale(names: list[str], latest: dict[str, int]) -> set[str]:
         nxt = max(latest.values(), default=0) + 1
         out: set[str] = set()
         for name in names:
-            fn = registry.QUERIES.get(name)
             rec = ledger.get(name)
-            h = fn_hash(fn)
+            h = fn_hash(registry.QUERIES.get(name))
             if rec is None and h is None:
-                # Unhashable AND unledgered (r12 advice): treating this
-                # as changed_round=nxt would pin the name into a
-                # fast-lane driver slot every round forever. It is not
-                # a rewrite signal — fall through to the rest tier.
-                continue
+                continue  # unhashable and unledgered: no rewrite signal, never pin it
             changed_round = rec.get("r", 0) if rec else nxt
             if rec is not None and h is not None and rec.get("h") != h:
                 changed_round = nxt  # edited but not re-ledgered
@@ -165,261 +87,50 @@ def _fn_hash_stale(names: list[str], latest: dict[str, int]) -> set[str]:
         return set()
 
 
-def _stale_checked(names: list[str]) -> dict[str, int]:
-    """Names whose implementing module changed SINCE their last driver
-    row (r7 verdict #3: l28 was rewritten in r6/r7 but last
-    driver-checked r5 — a rewritten query must not wait many rounds of
-    family round-robin for re-verification), mapped to the module's
-    change time (working-tree-dirty ranks newest). A name is stale when
-    its source module's last git commit postdates the commit of the
-    CORRECTNESS artifact that last sampled it, or the module is
-    currently dirty. Any git failure -> empty dict (rotation falls back
-    to the plain round-robin).
-
-    r12 DEMOTION: module granularity flags every query in an edited
-    module, and two verdicts running (r10 l8g..l8n burial, r11 "tpch.py
-    last sampled r4/r5") showed that incidental flood starving the
-    oldest-driver-row rotation. Direct rewrites are now caught at
-    function granularity by _fn_hash_stale (fast lane); this module
-    signal only breaks ties WITHIN the oldest-first rest tier, so a
-    module edit no longer jumps unrelated queries over older ones."""
-    latest = _latest_round_by_name()
-    round_time: dict[int, int] = {}
-    module_time: dict[str, int] = {}
-    dirty = _dirty_files()
-    stale: dict[str, int] = {}
-    for name in names:
-        rnd = latest.get(name)
-        if rnd is None:
-            continue  # unseen tier handles it
-        fn = registry.QUERIES.get(name)
-        code = getattr(fn, "__code__", None)
-        if code is None:
-            continue
-        src = code.co_filename
-        if os.path.relpath(src, _HERE) in dirty:
-            stale[name] = 2**62  # uncommitted = newest possible
-            continue
-        if src not in module_time:
-            module_time[src] = _git_commit_time(src)
-        if rnd not in round_time:
-            art = os.path.join(_HERE, f"CORRECTNESS_r{rnd:02d}.json")
-            t = _git_commit_time(art)
-            if not t:
-                # ADVICE r8: the newest artifact is typically UNTRACKED
-                # until the driver's end-of-round commit, so its commit
-                # time is 0 and staleness detection would silently
-                # degrade to plain round-robin for queries sampled that
-                # round. Fall back to the file's mtime — it bounds the
-                # sample time from above, so a module committed after it
-                # is still correctly flagged stale.
-                try:
-                    t = int(os.stat(art).st_mtime)
-                except OSError:
-                    t = 0
-            round_time[rnd] = t
-        if (
-            module_time[src]
-            and round_time[rnd]
-            and module_time[src] > round_time[rnd]
-        ):
-            stale[name] = module_time[src]
-    return stale
+def _family_round_robin(names: list[str], key) -> list[str]:
+    """One name per operator family (letter prefix) per turn, each family
+    sorted by ``key``, so a 50-name sample spans the families."""
+    fams: dict[str, list[str]] = {}
+    for n in names:
+        m = re.match(r"[a-z]+", n)
+        fams.setdefault(m.group(0) if m else n, []).append(n)
+    for fam in fams.values():
+        fam.sort(key=key)
+    return [
+        n for turn in itertools.zip_longest(*fams.values()) for n in turn if n is not None
+    ]
 
 
-# Verdict-flagged rewrites: {name: round it was rewritten}. A name
-# jumps the stale queue while its last driver row predates the
-# rewrite round; the first post-rewrite sample makes the entry
-# inert (no manual cleanup). r8 verdict #4: l31 was rewritten in
-# r6 but module-granularity staleness kept burying it behind wider
-# (incidental) module edits for two rounds running.
-# r10 (verdict #1): the r9 unified decode_pixels routing rewrote
-# the internals of l8g/l8h/l8j/l8k/l8l/l8m/l8n (and l28's build
-# path) AFTER their last driver rows, but oldest-stale-first
-# ordering placed them at positions 76-95 — behind 9 rounds of
-# accumulated incidental staleness — so they must jump the queue
-# explicitly. a17/a18/a19 gained full oracles in r10 (were
-# rows-only no_oracle) and must be re-sampled under the new
-# exact contract.
-_VERDICT_RESAMPLE = {
-    "l31_substring_dedup": 6,
-    "l8g_pixel_resize": 9,
-    "l8h_audio_decode": 9,
-    "l8j_png_decode": 9,
-    "l8k_gif_decode": 9,
-    "l8l_jpeg_decode": 9,
-    "l8m_tiff_decode": 9,
-    "l8n_media_dispatch": 9,
-    "l28_boilerplate_scrub": 9,
-    "a17_approx_percentile": 10,
-    "a18_hll_rollup": 10,
-    "a19_sketch_overlap": 10,
-    # r11: seventeen rows-only names gained certified hash-checked
-    # contracts (equals-batch streaming twins, error-bound sketches,
-    # graph/packing/eigen certificates) — each must earn its first
-    # driver row under the NEW oracle, not whenever module-level
-    # staleness happens to surface it.
-    "t4_stream_tumbling_watermark": 11,
-    "t4b_stream_tumbling_rocksdb": 11,
-    "t5_stream_dedup": 11,
-    "t6_stream_static_join": 11,
-    "t7_stateful_user_stats": 11,
-    "t8_foreach_batch_sink": 11,
-    "t9_stream_session_window": 11,
-    "t10_rate_source": 11,
-    "t12_stream_stream_join": 11,
-    "t13_stream_trending_topk": 11,
-    "t16_stream_cdc_apply": 11,
-    "t20_stream_anomaly_zscore": 11,
-    "a2_approx_count_distinct": 11,
-    "a25_windowed_hll": 11,
-    "l15_sequence_packing": 11,
-    "l35_pagerank_centrality": 11,
-    "l32b_pca_project": 11,
-    "l3f_ann_ivf_trained": 11,
-    # r12: the float-boundary pair gained full oracles via
-    # scaled-integer selection keys (quantized A-ES key_q; integer
-    # greedy MMR chain) — first driver rows under the new hash
-    # contracts. These dict entries are AUTHORITATIVE, not redundant:
-    # the src-hash ledger bootstrapped mid-r12 and recorded l39's
-    # post-rewrite hash at r=0, so the fast lane alone would never
-    # flag it (r12 review finding #5) — do not prune verdict entries
-    # on the assumption the hash lane caught them.
-    "l39_weighted_sample": 12,
-    "l3j_mmr_rerank": 12,
-    # r13 (r12 verdict #1): finish the driver-row freshness drain. 15
-    # names still carry pre-r7 driver rows, but the rest tier's family
-    # round-robin surfaces only ~1 name per family per ~13 slots — a
-    # 50-name sample drains at most 4 of the 10 q-shapes, so the drain
-    # would take 3 more rounds on rotation alone. Priority-tier them
-    # once; the entries go inert at their first r13+ sample.
-    "q5_local_supplier_volume": 13,
-    "q6_forecast_revenue": 13,
-    "q8_market_share": 13,
-    "q9_product_profit": 13,
-    "q12_lateness_priority": 13,
-    "q13_customer_distribution": 13,
-    "q14_promo_revenue": 13,
-    "q15_top_supplier": 13,
-    "q17_small_quantity_revenue": 13,
-    "q19_discounted_revenue": 13,
-    "j13_record_linkage": 13,
-    "l43_containment_neardup": 13,
-    "l2e_neardup_groups": 13,
-    "l33_canonical_selection": 13,
-    "l40_simhash_neardup": 13,
-    # r13: the relational campaign's all-null-FK corpora exposed an
-    # inner-vs-left join divergence in compile_visits_fused (cohort.py)
-    # — a HELPER-level fix the function-hash lane cannot see, so u5d
-    # must be driver-resampled explicitly under the fixed plan.
-    "u5d_cohort_visit_counts_fused": 13,
-    # r13 optimization round: helper-level plan-construction rewrites
-    # (value-identical, exceptAll/parity-verified in-session) that the
-    # function-hash lane cannot see — minhash_signatures' single-expr
-    # aggregate (dedup.py) feeds l2/l2f (l2e/l33 already tiered above);
-    # compile_fused/compile_visits_fused condition reuse (cohort.py)
-    # feeds the fused/auto cohort strategies (u5d already tiered).
-    "l2_minhash_neardup": 13,
-    "l2f_minhash_threshold": 13,
-    # (continuation) simhash's 64 vote aggregates -> one parsed SQL
-    # array expression (dedup.py simhash; same E3.1 lever) — feeds l2c
-    # (l40 already tiered above at its r13 entry).
-    "l2c_simhash": 13,
-    "u5_cohort_count_fused": 13,
-    "u5e_cohort_count_auto": 13,
-}
+def _rotation_tiers(names: list[str]) -> dict[str, list[str]]:
+    """Order for the driver's first-N sample, as four strict tiers:
 
-
-def _coverage_order(names: list[str], explain: bool = False):
-    """Order queries for the driver's first-N sample so no slot repeats a
-    prior round while unchecked queries remain: three strict tiers —
-    never-driver-checked oracle-backed, then never-checked rows-only,
-    then already-checked — each round-robined across operator families
-    (the letter prefix: j/w/p/o/f/t/l/x/q/a/u/s) for §2 diversity.
-    Tiering BEFORE the family round-robin matters: small families
-    exhaust their unchecked members mid-rotation, and interleaving them
-    with large families would backfill those slots with repeats.
+    - ``refail``: the latest driver row errored, so the fix is re-verified next round;
+    - ``unseen``: no driver row yet, oracle-backed names first in each family;
+    - ``fn_stale``: the query function changed since its last row, oldest row first;
+    - ``rest``: every family drains oldest driver row first.
     """
-    seen = _already_checked()
+    rows = _driver_rows()
+    last = {n: rnd for n, (rnd, _) in rows.items()}
     index = {n: i for i, n in enumerate(names)}
-
-    def fam_round_robin(subset: list[str], key=None) -> list[str]:
-        key = key or (lambda n: index[n])
-        fams: dict[str, list[str]] = {}
-        for n in subset:
-            m = re.match(r"[a-z]+", n)
-            fams.setdefault(m.group(0) if m else n, []).append(n)
-        for fam in fams.values():
-            fam.sort(key=key)
-        return [
-            n
-            for tier in itertools.zip_longest(*fams.values())
-            for n in tier
-            if n is not None
-        ]
-
-    failed = _failed_last_check()
-    refail = [n for n in names if n in failed]
-    unseen_oracle = [
-        n
-        for n in names
-        if n not in seen and n not in failed and n in registry.ORACLES
-    ]
-    unseen_rows = [
-        n
-        for n in names
-        if n not in seen and n not in failed and n not in registry.ORACLES
-    ]
-    checked = [n for n in names if n in seen and n not in failed]
-    # r8: the checked tier re-verifies REWRITTEN queries first — source
-    # module committed after the query's last driver row (git-aware) —
-    # ordered oldest-driver-row first (the most OVERDUE rewrite drains
-    # first; r9 fix: the r8 code sorted newest-change-first, which let
-    # one wide-module edit flood the sample and starve l31, stale since
-    # r6, for a third round); then the rest, family round-robined with
-    # oldest-checked leading inside each family.
-    stale = _stale_checked(checked)
-    last = _latest_round_by_name()
-    priority = [
-        n
-        for n, rnd in _VERDICT_RESAMPLE.items()
-        if n in checked and last.get(n, 0) < rnd
-    ]
-    # Fast lane (r12): queries whose OWN function source changed since
-    # their last driver row — function-granularity, so a module edit no
-    # longer floods this tier with unrelated names (r10/r11 verdicts).
-    fn_stale = _fn_hash_stale(
-        [n for n in checked if n not in priority], last
-    )
-    stale_first = sorted(fn_stale, key=lambda n: (last.get(n, 0), index[n]))
-    # Everything else drains OLDEST DRIVER ROW FIRST; the coarse
-    # module-commit-time signal only breaks ties inside a round, so
-    # incidental module staleness can never starve genuinely old rows.
-    rest = [n for n in checked if n not in fn_stale and n not in priority]
-    rest_key = lambda n: (  # noqa: E731
-        last.get(n, 0),
-        -stale.get(n, 0),
-        index[n],
-    )
-    # Tier 0: names whose latest driver row ERRORED — the fix must be
-    # re-verified next round, not whenever the round-robin reaches it.
-    tiers = {
+    refail = [n for n in names if n in rows and rows[n][1]]
+    unseen = [n for n in names if n not in rows]
+    checked = [n for n in names if n in rows and not rows[n][1]]
+    stale = _fn_hash_stale(checked, last)
+    rest = [n for n in checked if n not in stale]
+    oldest_first = lambda n: (last.get(n, 0), index[n])  # noqa: E731
+    oracle_first = lambda n: (n not in registry.ORACLES, index[n])  # noqa: E731
+    return {
         "refail": refail,
-        "unseen_oracle": fam_round_robin(unseen_oracle),
-        "unseen_rows": fam_round_robin(unseen_rows),
-        "priority": priority,
-        "fn_stale": stale_first,
-        "rest": fam_round_robin(rest, key=rest_key),
+        "unseen": _family_round_robin(unseen, key=oracle_first),
+        "fn_stale": sorted(stale, key=oldest_first),
+        "rest": _family_round_robin(rest, key=oldest_first),
     }
-    if explain:
-        return tiers
-    return [n for tier in tiers.values() for n in tier]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    order = _coverage_order(list(registry.QUERIES))
-    return {n: registry.QUERIES[n] for n in order}
+    tiers = _rotation_tiers(list(registry.QUERIES))
+    return {n: registry.QUERIES[n] for tier in tiers.values() for n in tier}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,13 +1,10 @@
-"""Driver-sample rotation invariants (__spark_entry__._coverage_order).
+"""Driver-sample rotation invariants (__spark_entry__._rotation_tiers).
 
 The rotation decides which 50 queries the grading driver re-verifies
-each round, so its tiering is product-facing: a starved tier means a
-rewritten or long-unsampled query ships rounds of changes with no
-driver row. r10 and r11 verdicts both traced that failure to
-module-granularity staleness flooding the fast lane; r12 replaced it
-with function-source-hash staleness + an oldest-driver-row rest tier.
-These tests pin the invariants structurally (no golden lists), so they
-stay true as CORRECTNESS artifacts accumulate.
+each round, so a starved tier means a rewritten or long-unsampled query
+ships changes with no driver row. These tests pin the invariants
+structurally (no golden lists), so they stay true as CORRECTNESS
+artifacts accumulate.
 """
 
 from __future__ import annotations
@@ -21,11 +18,16 @@ registry.load_all()
 
 
 def _tiers():
-    return entry._coverage_order(list(registry.QUERIES), explain=True)
+    return entry._rotation_tiers(list(registry.QUERIES))
+
+
+def _last_rounds() -> dict[str, int]:
+    return {n: rnd for n, (rnd, _) in entry._driver_rows().items()}
 
 
 def test_tiers_partition_the_registry():
     tiers = _tiers()
+    assert list(tiers) == ["refail", "unseen", "fn_stale", "rest"]
     flat = [n for t in tiers.values() for n in t]
     assert len(flat) == len(set(flat)) == len(registry.QUERIES)
     assert set(flat) == set(registry.QUERIES)
@@ -34,12 +36,11 @@ def test_tiers_partition_the_registry():
 
 def test_rest_tier_drains_oldest_driver_rows_first_within_family():
     """Within each operator family, the rest tier must order names by
-    their last driver round non-decreasingly — the r11 verdict's
-    'tpch.py last sampled r4/r5' starvation is impossible under this
-    invariant, because nothing with a NEWER row can precede an older
-    one inside its family slot sequence."""
+    their last driver round non-decreasingly: nothing with a newer row
+    can precede an older one inside its family slot sequence, so no
+    family member starves."""
     tiers = _tiers()
-    last = entry._latest_round_by_name()
+    last = _last_rounds()
     fams: dict[str, list[int]] = {}
     for n in tiers["rest"]:
         fam = re.match(r"[a-z]+", n).group(0)
@@ -54,9 +55,8 @@ def test_fn_stale_only_contains_genuinely_changed_functions():
     """The fast lane must hold ONLY names whose ledger change-round
     postdates their last driver row (or whose live hash disagrees with
     the ledger) — a module-wide edit flooding it is the regression this
-    guards against. Uses the SAME fn_hash the ledger writer and
-    _fn_hash_stale use (r12 advice: an inline dedent+sha1 copy here
-    could diverge silently from the production hasher)."""
+    guards against. Uses the same fn_hash as the ledger writer and
+    _fn_hash_stale, so the check cannot diverge from the hasher."""
     import json
     import os
 
@@ -65,7 +65,7 @@ def test_fn_stale_only_contains_genuinely_changed_functions():
 
     assert os.path.exists(LEDGER_PATH)
     tiers = _tiers()
-    last = entry._latest_round_by_name()
+    last = _last_rounds()
     with open(LEDGER_PATH) as fh:
         ledger = json.load(fh)
     for n in tiers["fn_stale"]:
@@ -83,10 +83,10 @@ def test_fn_stale_only_contains_genuinely_changed_functions():
 
 
 def test_unhashable_unledgered_name_is_not_pinned_stale():
-    """r12 advice: a query whose source inspect cannot retrieve (h None)
-    and which the ledger has never seen (rec None) must NOT be treated
-    as rewritten-every-round — that would permanently consume a
-    fast-lane driver slot. _fn_hash_stale skips it (rest tier)."""
+    """A query whose source inspect cannot retrieve (h None) and which
+    the ledger has never seen (rec None) must NOT be treated as
+    rewritten-every-round — that would permanently consume a fast-lane
+    driver slot. _fn_hash_stale skips it (rest tier)."""
     from lens_warehouse_spark import registry as reg
 
     fake = "zz99_unhashable_phantom"
@@ -101,26 +101,3 @@ def test_unhashable_unledgered_name_is_not_pinned_stale():
     finally:
         del reg.QUERIES[fake]
 
-
-def test_priority_tier_is_subset_of_unsampled_verdict_rewrites():
-    """priority names must still be AWAITING their first post-rewrite
-    driver row; once sampled they go inert, so the tier can only
-    shrink between code changes. (r12 review finding #6: the first
-    version of this test asserted a tautology — it now checks the real
-    membership rule against the module-level _VERDICT_RESAMPLE dict.)"""
-    tiers = _tiers()
-    last = entry._latest_round_by_name()
-    for n in tiers["priority"]:
-        assert n in entry._VERDICT_RESAMPLE, (
-            f"{n} in priority tier but not a verdict-flagged rewrite"
-        )
-        assert last.get(n, 0) < entry._VERDICT_RESAMPLE[n], (
-            f"{n} was already sampled in round {last.get(n)} — it must "
-            "be inert, not re-consuming a priority slot"
-        )
-    # and the converse: every still-unsampled verdict rewrite IS there
-    for n, rnd in entry._VERDICT_RESAMPLE.items():
-        if n in registry.QUERIES and last.get(n, 0) < rnd and n in last:
-            assert n in tiers["priority"] or n in tiers["refail"], (
-                f"verdict rewrite {n} (r{rnd}) missing from priority tier"
-            )

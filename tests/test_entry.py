@@ -27,7 +27,7 @@ def test_all_queries_run_on_smoke_sf(spark, sf_dir):
 
 
 def test_failed_rows_jump_the_rotation_queue(tmp_path, monkeypatch):
-    """Round-7 rotation tier 0: a name whose LATEST driver row errored
+    """Rotation tier 0: a name whose LATEST driver row errored
     must head the queries() order so its fix is re-verified next round;
     an OLDER error superseded by a clean row must not. Malformed or
     rows-only ('no_oracle') artifacts must not break the ordering."""
@@ -54,7 +54,7 @@ def test_failed_rows_jump_the_rotation_queue(tmp_path, monkeypatch):
         fh.write("{not json")  # must be skipped, not raise
     monkeypatch.setattr(entry_mod, "_HERE", d)
 
-    failed = entry_mod._failed_last_check()
+    failed = {n for n, (_, bad) in entry_mod._driver_rows().items() if bad}
     assert failed == {"l34_inverted_index"}
     order = list(entry_mod.queries())
     assert order[0] == "l34_inverted_index"
@@ -62,15 +62,16 @@ def test_failed_rows_jump_the_rotation_queue(tmp_path, monkeypatch):
 
 
 def test_rewritten_queries_lead_checked_tier(tmp_path, monkeypatch):
-    """r8 rotation: a checked query whose implementing module changed
-    since its last driver row must head the checked tier (oldest driver
-    row first), ahead of the family round-robin — so a rewrite is
-    re-verified the next round, not when the rotation happens to reach
-    it. Names with current rows and unchanged modules keep their
-    round-robin order, now oldest-checked-first inside each family."""
+    """A checked query whose own function changed since its last driver
+    row (per the src-hash ledger) must head the checked tiers, ahead of
+    the family round-robin, so the rewrite is re-verified next round.
+    Names with unchanged functions keep the round-robin order, oldest
+    driver row first. Without a ledger the ordering still works."""
     import json
+    import os
 
     from lens_warehouse_spark import registry
+    from tools.update_src_hashes import fn_hash
 
     d = str(tmp_path)
     with open(f"{d}/CORRECTNESS_r01.json", "w") as fh:
@@ -83,31 +84,53 @@ def test_rewritten_queries_lead_checked_tier(tmp_path, monkeypatch):
         )
     with open(f"{d}/CORRECTNESS_r02.json", "w") as fh:
         json.dump({"w3_running_total": {"err": None, "hash_match": True}}, fh)
+    checked = ["a1_count_distinct", "l28_boilerplate_scrub", "w3_running_total"]
+    ledger = {n: {"h": fn_hash(registry.QUERIES[n]), "r": 0} for n in checked}
+    ledger["l28_boilerplate_scrub"]["r"] = 2  # rewritten AFTER its r01 row
+    os.makedirs(f"{d}/tools")
+    ledger_path = f"{d}/tools/query_src_hashes.json"
+    with open(ledger_path, "w") as fh:
+        json.dump(ledger, fh)
     monkeypatch.setattr(entry_mod, "_HERE", d)
-    monkeypatch.setattr(entry_mod, "_dirty_files", lambda: set())
 
-    l28_src = registry.QUERIES["l28_boilerplate_scrub"].__code__.co_filename
-
-    def fake_commit_time(path):
-        if path == l28_src:
-            return 300  # module rewritten AFTER its r01 driver row...
-        if path.endswith("CORRECTNESS_r01.json"):
-            return 100  # ...which was committed here
-        if path.endswith("CORRECTNESS_r02.json"):
-            return 200
-        return 50  # every other module predates its driver row
-
-    monkeypatch.setattr(entry_mod, "_git_commit_time", fake_commit_time)
-
+    tiers = entry_mod._rotation_tiers(list(registry.QUERIES))
+    assert tiers["fn_stale"] == ["l28_boilerplate_scrub"]
     order = list(entry_mod.queries())
     pos = {n: i for i, n in enumerate(order)}
-    # unseen tiers (everything not in the artifacts) come first; among
-    # the three CHECKED names, the stale one leads
+    # unseen tier (everything not in the artifacts) comes first; among
+    # the three CHECKED names, the rewritten one leads
     assert pos["l28_boilerplate_scrub"] < pos["a1_count_distinct"]
     assert pos["l28_boilerplate_scrub"] < pos["w3_running_total"]
+    assert min(pos[n] for n in checked) == len(order) - len(checked)
     # non-stale checked names: oldest driver round first
     assert pos["a1_count_distinct"] < pos["w3_running_total"]
 
-    # and with no git information at all, ordering still works
-    monkeypatch.setattr(entry_mod, "_git_commit_time", lambda p: 0)
+    # an edit not yet re-ledgered (live hash != ledger) is stale too
+    ledger["l28_boilerplate_scrub"] = {"h": "0" * 40, "r": 0}
+    with open(ledger_path, "w") as fh:
+        json.dump(ledger, fh)
+    assert entry_mod._rotation_tiers(list(registry.QUERIES))["fn_stale"] == [
+        "l28_boilerplate_scrub"
+    ]
+
+    # and with no ledger at all, ordering still works
+    os.remove(ledger_path)
+    assert entry_mod._rotation_tiers(list(registry.QUERIES))["fn_stale"] == []
     assert set(entry_mod.queries()) == set(order)
+
+
+def test_queries_starts_no_subprocess(monkeypatch):
+    """Ordering queries() reads only committed files: it must not fork
+    git (or anything else) on every call."""
+    import subprocess
+
+    calls = []
+
+    def refuse(*a, **k):
+        calls.append(a)
+        raise OSError("queries() must not start a subprocess")
+
+    monkeypatch.setattr(subprocess, "run", refuse)
+    monkeypatch.setattr(subprocess, "Popen", refuse)
+    assert entry_mod.queries()
+    assert len(calls) == 0

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -666,22 +667,23 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
 }
 
 
+def mask_bucket(plan: str) -> str:
+    """Staging-keyed session-catalog names (s14 buckets) embed the sf_dir
+    fingerprint by design — not plan drift, and not stable across machines."""
+    return re.sub(r"lws_bucket_[0-9a-f]+", "lws_bucket_x", plan)
+
+
 def normalize_plan(plan: str) -> str:
     """Strip run-varying noise (expression ids, codegen stage ids, paths,
     statistics) so two runs of an unchanged query normalize identically —
     the unit of comparison for --diff."""
-    import re
-
     plan = plan.split("\n\n")[0]  # formatted-plan tree, not the node details
     plan = re.sub(r"#\d+L?", "#x", plan)
     plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=x]", plan)
     plan = re.sub(r"\[codegen id : \d+\]", "[codegen id : x]", plan)
     plan = re.sub(r"\(\d+\)", "(x)", plan)
     plan = re.sub(r"file:[^\s,\]]+", "file:x", plan)
-    # staging-keyed session-catalog names (s14 buckets) embed the
-    # sf_dir fingerprint by design — not plan drift
-    plan = re.sub(r"lws_bucket_[0-9a-f]+", "lws_bucket_x", plan)
-    return plan
+    return mask_bucket(plan)
 
 
 def main() -> int:
@@ -728,7 +730,7 @@ def main() -> int:
             if not ok:
                 failures.append((name, desc))
             out.append(f"- {mark}: {desc} (`{needle}`)\n")
-        head = plan.split("\n\n")[0]
+        head = mask_bucket(plan.split("\n\n")[0])
         out.append(f"\n```\n{head}\n```\n")
         snapshots[name] = normalize_plan(plan)
     with open(os.path.join(repo, "PLANS.md"), "w") as f:

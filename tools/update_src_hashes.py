@@ -5,17 +5,11 @@ query function's dedented source, "r": the driver round at which THIS
 hash first became eligible for sampling}. __spark_entry__ uses it for
 FUNCTION-granularity rewrite detection in the driver-sample rotation:
 a name is resampled-first only when its own function changed since its
-last driver row, not whenever any query in the same module was edited.
-
-Module-commit-time staleness (the r7-r11 mechanism) had module
-granularity, so one edit flooded the stale tier with every query in
-that module and starved the oldest-driver-row rest tier for rounds at
-a time — the r10 verdict's l8g..l8n burial and the r11 verdict's
-"tpch.py q-shapes last sampled r4/r5" complaint are both this defect.
-Function-source hashing removes the incidental flagging; helper-only
-rewrites (which function hashes cannot see) stay covered by the
-manually-curated verdict_resample dict in __spark_entry__, exactly the
-cases it already existed for.
+last driver row, not whenever any query in the same module was edited
+(module commit times flagged every query in an edited module and
+starved the oldest-driver-row rest tier). A helper-only rewrite leaves
+the function hash unchanged, so it is re-verified when the rest tier's
+oldest-driver-row-first rotation reaches the name.
 
 Run after editing any registered query: python tools/update_src_hashes.py
 (test_survey_coverage.py fails if the committed ledger is out of date.)
