@@ -8,7 +8,7 @@ decode/feature-extract stages read bytes inside ``mapInPandas`` workers
 so media bytes never pass through the driver.
 
 Codec honesty, by format: these are REAL first-principles spec
-decoders (built across r7–r10), all oracle-verified at the
+decoders, all oracle-verified at the
 pixel/sample level —
 - PPM (P6) and BMP (24-bit BI_RGB): ``decode_pixels`` →
   (h, w, 3) uint8; ``resize_pixels`` vectorized nearest-neighbor
@@ -30,7 +30,7 @@ pixel/sample level —
 - Y4M: ``decode_y4m`` frame sampling (l8i); gzip members
   output-capped at 256 MiB (s21); ``dispatch_media`` sniff-routes
   heterogeneous corpora and degrades garbage to corrupt/unknown
-  instead of raising (l8n; 780k-blob fuzz campaign, r10).
+  instead of raising (l8n; fuzzed by tools/fuzz_multimodal.py).
 Still DELIBERATELY out of scope — formats whose entropy layer would
 mean reimplementing a full A/V codec: mp3/ogg audio, h264/vp9 video
 (plus tiled TIFF above). For those the plumbing (schema, Arrow batch
@@ -56,14 +56,13 @@ from pyspark.sql.types import (
 from lens_warehouse_spark.catalog import table
 from lens_warehouse_spark.registry import register
 
-# r11 decompression-bomb doctrine, part 2: the r10 output caps are all
-# RELATIVE (codec expansion ceiling x payload size), which still lets a
-# large authored payload claim a multi-GB decode (100 MB of deflate at
-# 1032:1 is 100 GB). One absolute bound on decoded size closes the
-# class across every compressed codec here (TIFF strips, PNG IDAT, GIF
-# frames, FLAC samples), mirroring the gzip path's _S21_MAX_TEXT: no
-# legitimate corpus asset decodes past 256 MiB, and a Spark task must
-# never allocate unbounded memory for one row.
+# Absolute decoded-size cap for every compressed codec here (TIFF
+# strips, PNG IDAT, GIF frames, FLAC samples): the per-codec caps are
+# RELATIVE (expansion ceiling x payload size), which still lets a large
+# authored payload claim a multi-GB decode (100 MB of deflate at 1032:1
+# is 100 GB). Mirrors the gzip path's _S21_MAX_TEXT: no legitimate
+# corpus asset decodes past 256 MiB, and a Spark task must never
+# allocate unbounded memory for one row.
 _MAX_DECODED_BYTES = 256 << 20
 
 
@@ -86,9 +85,9 @@ def sniff_media(blob: bytes) -> tuple[str, int | None, int | None]:
     if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24:
         w, h = struct.unpack(">II", b[16:24])
         return ("png", w, h)
-    if b[:4] in (b"II*\x00", b"MM\x00*"):  # r8: TIFF (dims live in
+    if b[:4] in (b"II*\x00", b"MM\x00*"):  # TIFF (dims live in
         return ("tiff", None, None)  # IFD tags; decode_tiff parses them)
-    if b[:2] == b"P6":  # r8: netpbm P6 (the l8g interchange format)
+    if b[:2] == b"P6":  # netpbm P6 (the l8g interchange format)
         import re as _re
 
         m = _re.match(rb"P6\s+(\d+)\s+(\d+)\s", b[:64])
@@ -146,7 +145,7 @@ def sniff_media(blob: bytes) -> tuple[str, int | None, int | None]:
         return ("jpeg", None, None)
     if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
         return ("wav", None, None)
-    if b[:10] == b"YUV4MPEG2 ":  # r10: y4m joins the dispatch surface
+    if b[:10] == b"YUV4MPEG2 ":
         import re as _re
 
         wm = _re.search(rb"\bW(\d+)", b[:128])
@@ -154,7 +153,7 @@ def sniff_media(blob: bytes) -> tuple[str, int | None, int | None]:
         if wm and hm:
             return ("y4m", int(wm.group(1)), int(hm.group(1)))
         return ("y4m", None, None)
-    if b[:4] == b"fLaC":  # r9: decode_flac handles these
+    if b[:4] == b"fLaC":
         return ("flac", None, None)
     if b[:4] == b"OggS":
         return ("ogg", None, None)
@@ -569,12 +568,8 @@ def l8c_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # P6 PPM (netpbm) and 24-bit BI_RGB BMP. ``decode_pixels`` parses both
 # to an (h, w, 3) uint8 array; ``resize_image`` is a vectorized
 # nearest-neighbor resample (pure index arithmetic, the resample PIL's
-# Image.NEAREST performs) re-encoded as P6. PNG joined the real-decode
-# set in r8 (stdlib zlib — see decode_png); jpeg/gif still raise
-# NotImplementedError, and only those: their entropy layers (Huffman
-# DCT, LZW) have no stdlib decoder, so decoding them here would be
-# dishonest scope. The mapInPandas stage routes them to the header
-# sniff exactly as before.
+# Image.NEAREST performs) re-encoded as P6. PNG, GIF, JPEG and TIFF
+# route to their real decoders below.
 #
 # Scale shape: identical to l8c — media bytes move only worker-side
 # through Arrow batches; the resample is O(target pixels) numpy
@@ -582,7 +577,7 @@ def l8c_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def decode_pixels(blob: bytes):
     """(h, w, 3) uint8 pixels for any image payload this module can
-    decode: P6 PPM, BI_RGB BMP (24-bit and 8-bit paletted, r9), PNG,
+    decode: P6 PPM, BI_RGB BMP (24-bit and 8-bit paletted), PNG,
     GIF, JPEG and TIFF (gray planes stack to 3 channels; 16-bit PNG
     downscales to its high byte for this preview path).
 
@@ -626,7 +621,7 @@ def decode_pixels(blob: bytes):
             )
         top_down = h < 0
         h = abs(h)
-        if bpp == 8:  # r9: paletted BMP (BGRA quads after the DIB header)
+        if bpp == 8:  # paletted BMP (BGRA quads after the DIB header)
             n_colors = struct.unpack_from("<I", b, 46)[0] or 256
             pal_off = 14 + dib
             if pal_off + 4 * n_colors > len(b):
@@ -663,8 +658,6 @@ def decode_pixels(blob: bytes):
             px = (px >> 8).astype(np.uint8)  # 16-bit -> 8-bit preview
         return px[..., :3] if px.shape[2] >= 3 else np.repeat(px[..., :1], 3, 2)
     fmt, _, _ = sniff_media(b)
-    # r9: every image codec in this module routes here now — the
-    # entropy layers (Huffman DCT, LZW, Rice) are implemented above.
     if fmt == "gif":
         return decode_gif(b)
     if fmt == "jpeg":
@@ -812,7 +805,7 @@ def l8g_pixel_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def decode_audio(blob: bytes):
     """(sample_rate, channels, numpy sample array) from a PCM WAV blob.
-    Sample widths a real corpus contains (r9): 16-bit (-> int16),
+    Sample widths a real corpus contains: 16-bit (-> int16),
     8-bit unsigned (-> uint8 as stored, per the WAV convention that
     sub-9-bit samples are offset-binary), 24-bit packed (-> int32),
     32-bit int (-> int32) and 32-bit IEEE float (format 3 -> float32).
@@ -1120,10 +1113,8 @@ def l8i_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# L8j: REAL PNG decode — closes the r7 verdict's top gap. The r6-era
-# stub rationale ("compressed formats need a codec this container
-# lacks") was FALSE for PNG: its entropy layer is RFC-1950 zlib, which
-# is stdlib. ``decode_png`` is a complete decoder for non-interlaced
+# L8j: REAL PNG decode. PNG's entropy layer is RFC-1950 zlib, which is
+# stdlib. ``decode_png`` is a complete decoder for non-interlaced
 # 8-bit RGB/RGBA PNGs: chunk walk with CRC-32 verification, inflate of
 # the concatenated IDAT stream (Adler-32 checked by zlib itself), and
 # per-scanline reverse filtering for ALL FIVE filter types.
@@ -1146,7 +1137,7 @@ def l8i_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def decode_png(blob: bytes):
     """Pixels from a PNG — stdlib-only real decode (zlib inflate +
-    filter reconstruction). Full color-type AND depth coverage (r9):
+    filter reconstruction). Full color-type AND depth coverage:
     1/2/4/8/16-bit grayscale (-> (h, w) uint8, scaled to 8-bit for
     sub-byte depths; uint16 for 16), gray+alpha (-> (h, w, 2)),
     truecolor RGB/RGBA (-> (h, w, 3|4)), and 1/2/4/8-bit palette (PLTE
@@ -1208,7 +1199,7 @@ def decode_png(blob: bytes):
     if ctype == 3 and plte is None:
         raise ValueError("paletted PNG without PLTE")
     ch = ch_of[ctype]
-    # r10 robustness: chunk CRCs stop blind bit-rot, but an AUTHORED
+    # Chunk CRCs stop blind bit-rot, but an AUTHORED
     # file with valid CRCs can still declare huge dimensions over a
     # tiny (or bomb) zstream. Deflate expands at most ~1032:1, so a
     # header-implied raw size beyond that bound can't be legitimate —
@@ -1230,10 +1221,10 @@ def decode_png(blob: bytes):
         implied = h * (1 + (w * bits + 7) // 8)
     if implied > 1032 * idat_len + 65536:
         raise ValueError("PNG dimensions implausible for IDAT size")
-    if implied > _MAX_DECODED_BYTES:  # r11 absolute bomb cap
+    if implied > _MAX_DECODED_BYTES:
         raise ValueError("PNG decoded size exceeds cap")
     try:
-        # Output-capped at implied+1 (r11): the relative check above
+        # Output-capped at implied+1: the relative check above
         # bounds what the HEADER may claim, but the zstream itself
         # could still inflate past it — cap the materialization and
         # let the length checks below reject the overrun.
@@ -1241,11 +1232,11 @@ def decode_png(blob: bytes):
         raw0 = d.decompress(b"".join(idat), implied + 1)
         if d.unconsumed_tail:
             raise ValueError("IDAT inflates past implied size")
-        if not d.eof:  # truncated zstream: v1's zlib.decompress raised
+        if not d.eof:  # truncated zstream
             raise ValueError("incomplete IDAT zstream")
     except zlib.error as exc:  # CRC-valid but broken zstream (authored)
         raise ValueError(f"bad IDAT zstream: {exc}") from exc
-    if depth < 8:  # sub-byte gray/palette (r9): MSB-first packed pixels
+    if depth < 8:  # sub-byte gray/palette: MSB-first packed pixels
         vals = np.zeros((h, w), dtype=np.uint8)
         if interlace == 0:
             stride = (w * depth + 7) // 8
@@ -1470,6 +1461,51 @@ def _synth_png_exprs():
     }
 
 
+def _pixel_sums(docs: DataFrame, decode, with_channels: bool = False) -> DataFrame:
+    """Shared l8j/l8k/l8l/l8m decode stage: (doc_id, blob) -> width,
+    height, [channels,] pixel_sum and the position-weighted pos_sum
+    over the row-major pixels of ``decode(blob)``, in mapInPandas."""
+    import pandas as pd
+
+    out_schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("width", IntegerType()),
+            StructField("height", IntegerType()),
+        ]
+        + ([StructField("channels", IntegerType())] if with_channels else [])
+        + [
+            StructField("pixel_sum", LongType()),
+            StructField("pos_sum", LongType()),
+        ]
+    )
+
+    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        for pdf in batches:
+            ws, hs, chs, sums, pws = [], [], [], [], []
+            for blob in pdf["blob"]:
+                px = decode(blob)
+                flat = px.reshape(-1).astype(np.int64)
+                hs.append(px.shape[0])
+                ws.append(px.shape[1])
+                chs.append(px.shape[2] if px.ndim == 3 else 1)
+                sums.append(int(flat.sum()))
+                pws.append(int((flat * (np.arange(flat.size) + 1)).sum()))
+            cols = {
+                "doc_id": pdf["doc_id"].astype("int64"),
+                "width": pd.Series(ws, dtype="int32"),
+                "height": pd.Series(hs, dtype="int32"),
+                "channels": pd.Series(chs, dtype="int32"),
+                "pixel_sum": pd.Series(sums, dtype="int64"),
+                "pos_sum": pd.Series(pws, dtype="int64"),
+            }
+            yield pd.DataFrame({c: cols[c] for c in out_schema.fieldNames()})
+
+    return docs.mapInPandas(decode_batch, out_schema).orderBy("doc_id")
+
+
 @register(
     "l8j_png_decode",
     oracle="""
@@ -1507,8 +1543,6 @@ def l8j_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum and position-weighted sum, which the DuckDB oracle re-derives
     from the pixel formula alone (it never builds a PNG — three
     independent constructions must agree)."""
-    import pandas as pd
-
     e = _synth_png_exprs()
     docs = (
         table(spark, sf_dir, "documents")
@@ -1523,89 +1557,90 @@ def l8j_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__z", F.expr(e["zstream"]))
         .select("doc_id", F.expr(e["png"]).alias("blob"))
     )
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("channels", IntegerType()),
-            StructField("pixel_sum", LongType()),
-            StructField("pos_sum", LongType()),
-        ]
-    )
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ws, hs, chs, sums, pws = [], [], [], [], []
-            for b in pdf["blob"]:
-                px = decode_png(b)
-                h, w, ch = px.shape
-                flat = px.reshape(-1).astype(np.int64)
-                ws.append(w)
-                hs.append(h)
-                chs.append(ch)
-                sums.append(int(flat.sum()))
-                pws.append(int((flat * (np.arange(flat.size) + 1)).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series(chs, dtype="int32"),
-                    "pixel_sum": pd.Series(sums, dtype="int64"),
-                    "pos_sum": pd.Series(pws, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(decode_batch, out_schema).orderBy("doc_id")
+    return _pixel_sums(docs, decode_png, with_channels=True)
 
 
 # ---------------------------------------------------------------------------
-# L8k: REAL GIF decode — the r7 verdict's optional stretch after PNG.
-# GIF's entropy layer is LZW, which needs no library: ~60 lines of
-# dictionary decode. The verification pattern is l8j's, with the
-# twist inverted: the SQL synthesizer emits a VALID GIF using the
-# fixed-width LZW trick (a clear code every <=254 pixel codes keeps
-# every code 9 bits, so the bit-packing is closed-form and expressible
-# as SQL integer algebra), while the Python decoder implements FULL
+# L8k: REAL GIF decode. GIF's entropy layer is LZW, which needs no
+# library: one dictionary loop, shared with TIFF. The verification
+# pattern is l8j's, with the twist inverted: the SQL synthesizer emits
+# a VALID GIF using the fixed-width LZW trick (a clear code every <=254
+# pixel codes keeps every code 9 bits, so the bit-packing is
+# closed-form and expressible as SQL integer algebra), while the
+# Python decoder implements FULL
 # dictionary LZW with code-width growth — pytest additionally feeds it
 # streams from a real test-side LZW compressor, so both the degenerate
 # and the genuinely-compressed encodings are covered. The DuckDB
 # oracle again never builds a blob: it derives pixel sums straight
 # from the palette + index formulas.
 # ---------------------------------------------------------------------------
-def lzw_decode(data: bytes, min_code_size: int, limit: int | None = None) -> bytes:
-    """Full GIF-flavor LZW decode (variable code width, clear/end
-    codes, 12-bit cap). ValueError on a corrupt stream.
+class _BitReader:
+    """MSB-first bit reader over ``data`` from byte ``pos``; ``bit`` is
+    the number of bits already taken from ``data[pos]``."""
 
-    ``limit`` stops the decode once that many output bytes exist —
-    the caller knows w*h, and without a cap an AUTHORED clear-free
-    stream emits up to ~2730x its input (4096-entry strings per code;
-    GIF has no CRC to stop it), the LZW-bomb analog of the PNG/TIFF
-    deflate bounds (r10 review)."""
+    def __init__(self, data: bytes, pos: int = 0):
+        self.data = data
+        self.pos = pos
+        self.bit = 0
+
+    def _byte(self) -> int:
+        if self.pos >= len(self.data):
+            raise ValueError("bitstream exhausted")
+        return self.data[self.pos]
+
+    def _stride(self, byte: int) -> int:
+        """Bytes the current ``byte`` occupies in ``data``."""
+        return 1
+
+    def read_bits(self, n: int) -> int:
+        v = 0
+        while n:
+            byte = self._byte()
+            avail = 8 - self.bit
+            take = n if n < avail else avail
+            v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
+            self.bit += take
+            n -= take
+            if self.bit == 8:
+                self.align()
+        return v
+
+    def read_signed(self, n: int) -> int:
+        v = self.read_bits(n)
+        return v - (1 << n) if v >= (1 << (n - 1)) else v
+
+    def read_unary(self) -> int:
+        q = 0
+        while self.read_bits(1) == 0:
+            q += 1
+        return q
+
+    def align(self) -> None:
+        """Skip the rest of a partly read byte."""
+        if self.bit:
+            self.bit = 0
+            self.pos += self._stride(self.data[self.pos])
+
+
+def _lzw(read_code, min_code_size: int, early: int, limit: int | None) -> bytes:
+    """Dictionary LZW over the codes ``read_code(width)`` yields (None
+    once fewer than ``width`` bits remain): literals, then the clear and
+    end codes, a 4096-entry table, and a code width that grows when the
+    table reaches ``2^width - early`` entries, up to 12 bits.
+
+    ``limit`` stops the decode once that many output bytes exist: a
+    clear-free stream emits up to ~2730x its input (4096-entry strings
+    per code) and neither GIF nor TIFF strips carry a CRC to stop it.
+    ValueError on a corrupt stream."""
     clear = 1 << min_code_size
-    end = clear + 1
-    code_size = min_code_size + 1
     table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
+    width = min_code_size + 1
     out = bytearray()
     prev: bytes | None = None
-    bitpos = 0
-    total_bits = len(data) * 8
-    while True:
-        if bitpos + code_size > total_bits:
-            break  # stream ended without an explicit end code
-        code = 0
-        for b in range(code_size):
-            byte = data[(bitpos + b) >> 3]
-            code |= ((byte >> ((bitpos + b) & 7)) & 1) << b
-        bitpos += code_size
-        if code == end:
-            break
+    while (code := read_code(width)) is not None and code != clear + 1:
         if code == clear:
-            code_size = min_code_size + 1
             del table[clear + 2 :]
+            width = min_code_size + 1
             prev = None
             continue
         if prev is None:
@@ -1614,11 +1649,8 @@ def lzw_decode(data: bytes, min_code_size: int, limit: int | None = None) -> byt
             entry = table[code]
         elif code < len(table):
             entry = table[code]
-            # ADVICE r8: cap the table at the 4096-code GIF maximum.
-            # Conforming streams never assign past 4095 (the encoder
-            # must emit a clear), but a crafted stream without clears
-            # would otherwise grow the table — and the prev+entry
-            # strings — without bound.
+            # conforming encoders clear before code 4096; without the cap
+            # a clear-free stream grows the table without bound
             if len(table) < 4096:
                 table.append(prev + entry[:1])
         elif code == len(table):
@@ -1630,18 +1662,34 @@ def lzw_decode(data: bytes, min_code_size: int, limit: int | None = None) -> byt
         out += entry
         prev = entry
         if limit is not None and len(out) >= limit:
-            break  # caller has all the pixels it asked for
-        # GIF rule: width grows when the NEXT code to assign no longer
-        # fits, capped at 12 bits (then the encoder must emit a clear)
-        if len(table) == (1 << code_size) and code_size < 12:
-            code_size += 1
+            break
+        if len(table) == (1 << width) - early and width < 12:
+            width += 1
     return bytes(out)
+
+
+def lzw_decode(data: bytes, min_code_size: int, limit: int | None = None) -> bytes:
+    """GIF-flavor LZW: codes packed LSB-first; the width grows when the
+    NEXT code to assign no longer fits (table size 2^width). ``limit``
+    and errors as in ``_lzw``."""
+    bitpos = 0
+
+    def read_code(width: int) -> int | None:
+        nonlocal bitpos
+        if bitpos + width > 8 * len(data):
+            return None
+        shift = bitpos & 7
+        chunk = int.from_bytes(data[bitpos >> 3 : (bitpos + width + 7) >> 3], "little")
+        bitpos += width
+        return (chunk >> shift) & ((1 << width) - 1)
+
+    return _lzw(read_code, min_code_size, 0, limit)
 
 
 def decode_gif(blob: bytes):
     """(h, w, 3) uint8 RGB pixels from a single-frame GIF87a/89a —
     real LZW decode, stdlib-only. Handles global AND local color
-    tables and interlaced row order (r9). ValueError on malformed
+    tables and interlaced row order. ValueError on malformed
     structure."""
     import struct
 
@@ -1674,12 +1722,12 @@ def decode_gif(blob: bytes):
         if pos + 10 > len(b):
             raise ValueError("truncated image descriptor")
         _x, _y, w, h = struct.unpack_from("<HHHH", b, pos + 1)
-        if w * h * 3 > _MAX_DECODED_BYTES:  # r11 absolute bomb cap
+        if w * h * 3 > _MAX_DECODED_BYTES:
             raise ValueError("GIF decoded size exceeds cap")
         iflags = b[pos + 9]
         pos += 10
         ct = gct
-        if iflags & 0x80:  # local color table overrides global (r9)
+        if iflags & 0x80:  # local color table overrides global
             n = 2 << (iflags & 0x07)
             if pos + n * 3 > len(b):
                 raise ValueError("truncated local color table")
@@ -1687,7 +1735,7 @@ def decode_gif(blob: bytes):
             pos += n * 3
         if ct is None:
             raise ValueError("no color table")
-        if pos >= len(b):  # r10 fuzz (crc32-reseeded stream found it):
+        if pos >= len(b):
             raise ValueError("truncated before LZW min code size")
         min_code_size = b[pos]
         pos += 1
@@ -1697,11 +1745,10 @@ def decode_gif(blob: bytes):
             data += b[pos + 1 : pos + 1 + ln]
             pos += 1 + ln
         pos += 1  # sub-block terminator
-        # Bomb-guard tradeoff (advisor r11): `limit` makes lzw_decode
-        # STOP once w*h bytes exist, so corruption in trailing entropy
-        # data past that point decodes silently where r9 rejected it.
-        # Accepted: the cap is what bounds memory on adversarial rows,
-        # and the first w*h bytes are still fully validated.
+        # `limit` stops the decode once w*h bytes exist, so corruption
+        # in entropy data past that point goes unseen; accepted because
+        # the cap is what bounds memory on adversarial rows, and the
+        # first w*h bytes are still fully validated.
         idx = np.frombuffer(
             lzw_decode(bytes(data), min_code_size, limit=w * h), np.uint8
         )
@@ -1711,7 +1758,7 @@ def decode_gif(blob: bytes):
         if int(idx.max(initial=0)) >= len(ct):
             raise ValueError("pixel index beyond color table")
         px = ct[idx].reshape(h, w, 3)
-        if iflags & 0x40:  # interlaced (r9): 4-pass row reorder
+        if iflags & 0x40:  # interlaced: 4-pass row reorder
             order = (
                 list(range(0, h, 8))
                 + list(range(4, h, 8))
@@ -1831,8 +1878,6 @@ def l8k_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer algebra) -> full dictionary-LZW decode + palette lookup in
     mapInPandas -> exact pixel and position-weighted sums, re-derived
     by DuckDB from the palette/index formulas alone."""
-    import pandas as pd
-
     e = _synth_gif_exprs()
     docs = (
         table(spark, sf_dir, "documents")
@@ -1849,40 +1894,7 @@ def l8k_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__gct", F.expr(e["gct"]))
         .select("doc_id", F.expr(e["gif"]).alias("blob"))
     )
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("pixel_sum", LongType()),
-            StructField("pos_sum", LongType()),
-        ]
-    )
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ws, hs, sums, pws = [], [], [], []
-            for blob in pdf["blob"]:
-                px = decode_gif(blob)
-                h, w, _ = px.shape
-                flat = px.reshape(-1).astype(np.int64)
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(flat.sum()))
-                pws.append(int((flat * (np.arange(flat.size) + 1)).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "pixel_sum": pd.Series(sums, dtype="int64"),
-                    "pos_sum": pd.Series(pws, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(decode_batch, out_schema).orderBy("doc_id")
+    return _pixel_sums(docs, decode_gif)
 
 
 # ---------------------------------------------------------------------------
@@ -1931,44 +1943,29 @@ def _huffman_table(counts: list[int], symbols: bytes) -> dict[tuple[int, int], i
     return table
 
 
-class _BitReader:
-    """MSB-first entropy-segment reader with 0xFF00 unstuffing."""
+class _JpegBits(_BitReader):
+    """JPEG entropy-segment reader: a 0xFF data byte carries a stuffed
+    0x00 that is skipped; 0xFF followed by anything else is a marker."""
 
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
+    def _byte(self) -> int:
+        if self.pos >= len(self.data):
+            raise ValueError("entropy stream exhausted")
+        byte = self.data[self.pos]
+        if byte == 0xFF:
+            nxt = self.data[self.pos + 1] if self.pos + 1 < len(self.data) else None
+            if nxt != 0x00:
+                # a bare trailing 0xFF has no next byte to format
+                tag = f"{nxt:02x}" if nxt is not None else "<EOF>"
+                raise ValueError(f"unexpected marker 0xFF{tag} in scan")
+        return byte
 
-    def read_bit(self) -> int:
-        while True:
-            if self.pos >= len(self.data):
-                raise ValueError("entropy stream exhausted")
-            byte = self.data[self.pos]
-            if byte == 0xFF:
-                nxt = self.data[self.pos + 1] if self.pos + 1 < len(self.data) else None
-                if nxt != 0x00:
-                    # ADVICE r8: a bare trailing 0xFF leaves nxt=None and
-                    # {nxt:02x} raised TypeError instead of the intended
-                    # ValueError — format defensively.
-                    tag = f"{nxt:02x}" if nxt is not None else "<EOF>"
-                    raise ValueError(f"unexpected marker 0xFF{tag} in scan")
-            b = (byte >> (7 - self.bit)) & 1
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 2 if byte == 0xFF else 1  # skip stuffed 0x00
-            return b
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
+    def _stride(self, byte: int) -> int:
+        return 2 if byte == 0xFF else 1
 
     def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
         code = 0
         for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
+            code = (code << 1) | self.read_bits(1)
             sym = table.get((length, code))
             if sym is not None:
                 return sym
@@ -1983,7 +1980,7 @@ def _extend(v: int, cat: int) -> int:
 
 
 def _parse_dqt(seg: bytes, qtables: dict) -> None:
-    """DQT segment: 8-bit (pq=0) or 16-bit (pq=1, r9) tables, stored in
+    """DQT segment: 8-bit (pq=0) or 16-bit (pq=1) tables, stored in
     zigzag order as read."""
     import numpy as np
 
@@ -2010,7 +2007,7 @@ def _parse_dqt(seg: bytes, qtables: dict) -> None:
 def _parse_dht(seg: bytes, dc_tables: dict, ac_tables: dict) -> None:
     i = 0
     while i < len(seg):
-        if i + 17 > len(seg):  # r10 fuzz: short DHT crashed _huffman_table
+        if i + 17 > len(seg):  # _huffman_table needs all 16 counts
             raise ValueError("truncated DHT segment")
         tc, th = seg[i] >> 4, seg[i] & 0x0F
         counts = list(seg[i + 1 : i + 17])
@@ -2023,9 +2020,9 @@ def _parse_dht(seg: bytes, dc_tables: dict, ac_tables: dict) -> None:
 
 
 def _parse_sof(seg: bytes) -> tuple[int, int, list]:
-    """Shared SOF0/SOF2 frame-header parse with the length guards the
-    r10 fuzz sweep demanded (a truncated SOF crashed with struct.error
-    / IndexError instead of the ValueError the dispatch layer catches).
+    """Shared SOF0/SOF2 frame-header parse. Length guards turn a
+    truncated SOF into the ValueError the dispatch layer catches, not
+    struct.error / IndexError.
     Returns (h, w, [(component id, hs, vs, tq), ...])."""
     import struct
 
@@ -2061,12 +2058,12 @@ def decode_jpeg_gray(blob: bytes):
 def decode_jpeg(blob: bytes):
     """(h, w) uint8 for grayscale or (h, w, 3) uint8 RGB for color
     baseline sequential JPEG — real entropy decode, stdlib+numpy only.
-    Color (r9, verdict #3): per-component DQT/DHT selection, one
+    Color: per-component DQT/DHT selection, one
     interleaved 3-component scan decoded MCU by MCU with generic
     integer sampling factors (4:4:4, 4:2:2 and the ubiquitous 4:2:0),
     per-component DC predictors, chroma upsample by pixel replication,
     JFIF YCbCr->RGB (see _ycbcr_to_rgb for the rounding contract).
-    Progressive (SOF2) streams decode for real too (r9): coefficients
+    Progressive (SOF2) streams decode for real too: coefficients
     accumulate across spectral-selection / successive-approximation
     scans and IDCT once at EOI (_decode_jpeg_progressive). ValueError
     on malformed structure; NotImplementedError for extended/lossless
@@ -2100,13 +2097,13 @@ def decode_jpeg(blob: bytes):
             _parse_dht(seg, dc_tables, ac_tables)
         elif marker == 0xC0:  # SOF0 baseline
             frame = _parse_sof(seg)  # (h, w, comp spec triplets)
-        elif marker == 0xC2:  # SOF2 progressive (r9)
+        elif marker == 0xC2:  # SOF2 progressive
             frame = _parse_sof(seg)
             progressive = True
         elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
             raise NotImplementedError("non-baseline JPEG (extended/lossless)")
         elif marker == 0xDD:  # DRI: some encoders emit interval 0,
-            # which needs no restart support — only reject nonzero (r10)
+            # which needs no restart support — only reject nonzero
             if len(seg) < 2:
                 raise ValueError("short DRI segment")
             if struct.unpack_from(">H", seg, 0)[0]:
@@ -2123,7 +2120,7 @@ def decode_jpeg(blob: bytes):
                 raise ValueError("truncated SOS header")
             ns = seg[0]
             if ns < 1 or ns > 4 or len(seg) < 4 + 2 * ns:
-                raise ValueError("truncated SOS header")  # r10 fuzz guard
+                raise ValueError("truncated SOS header")
             if ns != len(comps):
                 raise NotImplementedError(
                     "multi-scan JPEG (partial-component scan)"
@@ -2165,7 +2162,7 @@ def _decode_block(r, q, dc_t, ac_t, pred, m):
 
     zz = np.zeros(64, dtype=np.int32)
     cat = r.read_symbol(dc_t)
-    if cat > 15:  # r10 fuzz: a corrupt DHT can map to any symbol byte,
+    if cat > 15:  # a corrupt DHT can map to any symbol byte,
         raise ValueError("invalid DC category")  # and read_bits(200)
     pred += _extend(r.read_bits(cat), cat)  # would overflow int32 below
     if pred.bit_length() > 24:  # valid 8-bit DC stays within +/-2047
@@ -2205,7 +2202,7 @@ def _decode_scan(scan, h, w, specs):
     smoothing filter is mandated by the spec)."""
     import numpy as np
 
-    r = _BitReader(scan)
+    r = _JpegBits(scan)
     m = _idct_matrix()
     if len(specs) == 1:
         specs = [(1, 1) + tuple(specs[0][2:])]  # sampling moot, F.2.2
@@ -2216,7 +2213,7 @@ def _decode_scan(scan, h, w, specs):
             raise NotImplementedError("fractional sampling ratio")
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # r10 fuzz guard: every block costs >= 2 entropy bits (DC code +
+    # Every block costs >= 2 entropy bits (DC code +
     # EOB), so a frame whose block count exceeds 4 bits-per-byte x the
     # scan length is structurally impossible — reject BEFORE allocating
     # plane buffers a corrupt 65535x65535 SOF would size at gigabytes.
@@ -2261,7 +2258,7 @@ def _jpeg_assemble(planes, samplings, h, w, hmax, vmax):
 
 
 def _decode_jpeg_progressive(b, pos, frame, qtables, dc_tables, ac_tables):
-    """Progressive (SOF2) decode (r9): coefficients accumulate across
+    """Progressive (SOF2) decode: coefficients accumulate across
     scans in per-component zigzag buffers; dequant + IDCT run once at
     EOI. Implements the full scan grammar — interleaved DC scans,
     single-component AC scans over the component's own block raster,
@@ -2281,14 +2278,14 @@ def _decode_jpeg_progressive(b, pos, frame, qtables, dc_tables, ac_tables):
             raise NotImplementedError("fractional sampling ratio")
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # r10 fuzz guard (see _decode_scan): a complete first DC scan costs
+    # As in _decode_scan: a complete first DC scan costs
     # >= 1 bit per block, so the grid can't exceed 8 bits-per-byte x the
     # remaining stream — reject before sizing gigabyte coef buffers
     # from a corrupt SOF2.
     total_blocks = mcux * mcuy * sum(c[1] * c[2] for c in comps)
     if total_blocks > 8 * max(len(b) - pos, 1):
         raise ValueError("entropy data too short for frame dimensions")
-    # r10 review: the data bound alone still admits coef buffers up to
+    # The data bound alone still admits coef buffers up to
     # 2048x the blob (256 B of int32 per block); an absolute cap keeps
     # the worst-case allocation at 256 MB. 2^20 blocks = 67 Mpx gray —
     # beyond any progressive JPEG this preview path should chew on.
@@ -2320,7 +2317,7 @@ def _decode_jpeg_progressive(b, pos, frame, qtables, dc_tables, ac_tables):
             _parse_dqt(seg, qtables)
         elif marker == 0xC4:
             _parse_dht(seg, dc_tables, ac_tables)
-        elif marker == 0xDD:  # DRI(0) is a no-op; see baseline loop (r10)
+        elif marker == 0xDD:  # DRI(0) is a no-op; see baseline loop
             if len(seg) < 2:
                 raise ValueError("short DRI segment")
             if struct.unpack_from(">H", seg, 0)[0]:
@@ -2330,24 +2327,20 @@ def _decode_jpeg_progressive(b, pos, frame, qtables, dc_tables, ac_tables):
                 raise ValueError("truncated SOS header")
             ns = seg[0]
             if ns < 1 or ns > 4 or len(seg) < 4 + 2 * ns:
-                raise ValueError("truncated SOS header")  # r10 fuzz guard
+                raise ValueError("truncated SOS header")
             sel = [
                 (seg[1 + 2 * si], seg[2 + 2 * si] >> 4, seg[2 + 2 * si] & 0x0F)
                 for si in range(ns)
             ]
             ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
             ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0x0F
-            r = _BitReader(b)
-            r.pos = pos + 2 + ln
+            r = _JpegBits(b, pos + 2 + ln)
             _jpeg_progressive_scan(
                 r, comps, by_id, sel, ss, se, ah, al,
                 coef, bdims, mcux, mcuy, dc_tables, ac_tables,
             )
             saw_scan = True
-            # skip entropy padding bits to the next marker; a partially
-            # consumed stuffed 0xFF still owns its 0x00
-            if r.bit:
-                r.pos += 2 if b[r.pos] == 0xFF else 1
+            r.align()  # padding bits up to the next marker
             pos = r.pos
             continue
         pos += 2 + ln
@@ -2449,7 +2442,7 @@ def _jpeg_progressive_scan(
 def _jpeg_dc_unit(r, cbuf, by, bx, dc_t, pred, ah, al):
     if ah == 0:  # first scan: category-coded diff of (dc >> al)
         cat = r.read_symbol(dc_t)
-        if cat > 15:  # r10 fuzz guards; see _decode_block
+        if cat > 15:  # see _decode_block
             raise ValueError("invalid DC category")
         pred += _extend(r.read_bits(cat), cat)
         # valid 8-bit DC stays within +/-2047 and Al <= 13 (24 bits
@@ -2687,8 +2680,6 @@ def l8l_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode in mapInPandas (canonical Huffman, unstuffing, zigzag,
     dequant, real 8x8 IDCT) -> exact pixel and position-weighted sums,
     re-derived by DuckDB from the DC formula alone."""
-    import pandas as pd
-
     e = _synth_jpeg_exprs()
     docs = (
         table(spark, sf_dir, "documents")
@@ -2701,46 +2692,12 @@ def l8l_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__pk", F.expr(e["packed"]))
         .select("doc_id", F.expr(e["jpeg"]).alias("blob"))
     )
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("pixel_sum", LongType()),
-            StructField("pos_sum", LongType()),
-        ]
-    )
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ws, hs, sums, pws = [], [], [], []
-            for blob in pdf["blob"]:
-                px = decode_jpeg_gray(blob)
-                h, w = px.shape
-                flat = px.reshape(-1).astype(np.int64)
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(flat.sum()))
-                pws.append(int((flat * (np.arange(flat.size) + 1)).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "pixel_sum": pd.Series(sums, dtype="int64"),
-                    "pos_sum": pd.Series(pws, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(decode_batch, out_schema).orderBy("doc_id")
+    return _pixel_sums(docs, decode_jpeg_gray)
 
 
 # ---------------------------------------------------------------------------
-# L8o: COLOR baseline JPEG (r9, verdict #3 — the largest remaining
-# real-corpus gap; real-world JPEG corpora are overwhelmingly color
-# 4:2:0). The decoder side is fully general (decode_jpeg: interleaved
+# L8o: COLOR baseline JPEG (real-world JPEG corpora are overwhelmingly
+# color 4:2:0). The decoder side is fully general (decode_jpeg: interleaved
 # 3-component MCU walk, per-component tables and DC predictors, chroma
 # replication upsample, JFIF YCbCr->RGB); the SQL synthesizer keeps the
 # l8l closed-form trick per component: all-8-bit Huffman tables,
@@ -3012,19 +2969,19 @@ def l8q_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# L8p: REAL FLAC decode (r9, verdict #7) — the one remaining feasible
-# audio codec: pure integer Rice + fixed/LPC prediction, no stdlib
-# entropy layer needed. The decoder implements the subset a lossless
-# 16-bit corpus needs from the public spec (RFC 9639): fLaC metadata
-# walk, STREAMINFO, frame-header parse (all blocksize/rate codes,
-# UTF-8-coded frame numbers, CRC-8 verify), subframe types CONSTANT /
-# VERBATIM / FIXED 0-4 / LPC 1-32, Rice residual partitions (4- and
-# 5-bit params, raw escape), wasted bits, the three stereo
-# decorrelation modes (left/right/mid-side), and frame CRC-16 verify —
-# so a corrupted container or a bit-slipped stream raises, never
-# mis-decodes. The SQL synthesizer emits valid mono 16-bit streams via
-# VERBATIM subframes: with blocksize 256 and a 1-byte UTF-8 frame
-# number, EVERY field is byte-aligned, so the whole file is closed-form
+# L8p: REAL FLAC decode — the one feasible audio codec: pure integer
+# Rice + fixed/LPC prediction, no stdlib entropy layer needed. The
+# decoder implements the subset a lossless 16-bit corpus needs from the
+# public spec (RFC 9639): fLaC metadata walk, STREAMINFO, frame-header
+# parse (all blocksize/rate codes, UTF-8-coded frame numbers, CRC-8
+# verify), subframe types CONSTANT / VERBATIM / FIXED 0-4 / LPC 1-32,
+# Rice residual partitions (4- and 5-bit params, raw escape), wasted
+# bits, the three stereo decorrelation modes (left/right/mid-side), and
+# frame CRC-16 verify — so a corrupted container or a bit-slipped
+# stream raises, never mis-decodes. The SQL synthesizer emits valid
+# mono 16-bit streams via VERBATIM subframes: with blocksize 256 and a
+# 1-byte UTF-8 frame number, EVERY field is byte-aligned, so the whole
+# file is closed-form
 # byte algebra — including the spec's CRC-8 (poly 0x07) and CRC-16
 # (poly 0x8005), folded in SQL with nested aggregate() so the decoder's
 # verification pins the SQL CRCs against Python's. pytest's independent
@@ -3070,48 +3027,7 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _FlacBits:
-    """MSB-first bit reader (no unstuffing — FLAC has none)."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        while n:
-            if self.pos >= len(self.data):
-                raise ValueError("FLAC bitstream exhausted")
-            avail = 8 - self.bit
-            take = n if n < avail else avail
-            v = (v << take) | (
-                (self.data[self.pos] >> (avail - take)) & ((1 << take) - 1)
-            )
-            self.bit += take
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-            n -= take
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read_bits(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read_bits(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
-def _flac_utf8_number(r: _FlacBits) -> int:
+def _flac_utf8_number(r: _BitReader) -> int:
     """The frame header's UTF-8-style coded number (up to 36 bits)."""
     b0 = r.read_bits(8)
     if b0 < 0x80:
@@ -3130,7 +3046,7 @@ def _flac_utf8_number(r: _FlacBits) -> int:
     return v
 
 
-def _flac_residual(r: _FlacBits, order: int, blocksize: int) -> list[int]:
+def _flac_residual(r: _BitReader, order: int, blocksize: int) -> list[int]:
     method = r.read_bits(2)
     if method > 1:
         raise ValueError("reserved residual coding method")
@@ -3138,9 +3054,8 @@ def _flac_residual(r: _FlacBits, order: int, blocksize: int) -> list[int]:
     porder = r.read_bits(4)
     nparts = 1 << porder
     # first partition carries (blocksize >> porder) - order residuals;
-    # validate blocksize > order UNCONDITIONALLY (r10: the old `and
-    # porder` gate let order >= blocksize through at porder 0, yielding
-    # ragged channel lengths and a confusing numpy error downstream)
+    # blocksize > order must hold at porder 0 too, or the channels come
+    # out ragged
     if blocksize % nparts or (blocksize >> porder) <= order:
         raise ValueError("invalid Rice partition order")
     out: list[int] = []
@@ -3161,7 +3076,7 @@ def _flac_residual(r: _FlacBits, order: int, blocksize: int) -> list[int]:
 _FLAC_FIXED_COEF = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1]}
 
 
-def _flac_subframe(r: _FlacBits, blocksize: int, bps: int) -> list[int]:
+def _flac_subframe(r: _BitReader, blocksize: int, bps: int) -> list[int]:
     if r.read_bits(1):
         raise ValueError("invalid subframe padding bit")
     t = r.read_bits(6)
@@ -3246,7 +3161,7 @@ def decode_flac(blob: bytes):
             raise ValueError(f"lost frame sync at {pos}")
         if b[pos + 1] & 0x02:
             raise ValueError("reserved frame-header bit set")
-        r = _FlacBits(b, pos + 2)
+        r = _BitReader(b, pos + 2)
         bs_code = r.read_bits(4)
         sr_code = r.read_bits(4)
         ca = r.read_bits(4)
@@ -3301,10 +3216,9 @@ def decode_flac(blob: bytes):
             raise ValueError("frame CRC-16 mismatch")
         for ci in range(nch):
             chans[ci].extend(subs[ci])
-        # r11 absolute cap: a crafted stream of constant subframes
-        # expands ~30000:1 (65535 samples from ~10 bytes/frame) — no
-        # relative bound catches that, so cap total decoded bytes
-        # like every other codec here.
+        # a crafted stream of constant subframes expands ~30000:1
+        # (65535 samples from ~10 bytes/frame) — no relative bound
+        # catches that, so cap total decoded bytes.
         if len(chans[0]) * nch * 8 > _MAX_DECODED_BYTES:
             raise ValueError("FLAC decoded size exceeds cap")
         pos = r.pos
@@ -3504,9 +3418,9 @@ def gunzip_stats(blob: bytes) -> tuple[int, int, str | None]:
     ``_S21_MAX_TEXT`` — degrade to (0, 0, None) instead of raising:
     real gzip corpora rot, and one bad member must not kill the task
     ingesting its batch (same corrupt-row doctrine as dispatch_media;
-    see SCALE.md). Decompression is output-capped member by member
-    (r10 review: ``gzip.decompress`` has no cap, so a few-MB authored
-    bomb inflated to multi-GB before any catchable error fired)."""
+    see SCALE.md). Decompression is output-capped member by member:
+    ``gzip.decompress`` has no cap, so a few-MB authored bomb would
+    inflate to multi-GB before any catchable error fired."""
     import hashlib
     import zlib
 
@@ -3619,80 +3533,29 @@ def _tiff_packbits(data: bytes, expected: int) -> bytes:
 
 
 def _tiff_lzw(data: bytes, limit: int | None = None) -> bytes:
-    """TIFF LZW (compression 5): MSB-first bit order (GIF is LSB),
-    fixed 8-bit symbols, ClearCode 256 / EOI 257, and the spec's
-    'early change' — the code width grows one code EARLIER than GIF:
-    the encoder switches when its table size reaches 2^width (so code
-    511 is already written with 10 bits), hence the decoder switches
-    at table size 2^width - 1. ``limit`` caps output bytes like
-    lzw_decode's (r10: LZW-bomb guard — decode_tiff knows the strip's
-    expected size up front)."""
-    clear, eoi = 256, 257
-    out = bytearray()
-    table: list[bytes] = []
-    width = 9
+    """TIFF LZW (compression 5): codes packed MSB-first, and the
+    spec's 'early change': the encoder widens when its table reaches
+    2^width (code 511 is already written with 10 bits), and the
+    decoder's table runs one entry behind, so it widens at 2^width - 1
+    (libtiff tif_lzw.c: ``free_ent > nbitsmask - 1``)."""
+    r = _BitReader(data)
 
-    def reset():
-        nonlocal table, width
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
+    def read_code(width: int) -> int | None:
+        if 8 * (len(data) - r.pos) - r.bit < width:
+            return None
+        return r.read_bits(width)
 
-    reset()
-    bitpos = 0
-    total = len(data) * 8
-    prev = None
-    while bitpos + width <= total:
-        code = 0
-        for _ in range(width):
-            code = (code << 1) | (
-                (data[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
-            )
-            bitpos += 1
-        if code == eoi:
-            break
-        if code == clear:
-            reset()
-            prev = None
-            continue
-        if prev is None:
-            if code >= 256:
-                raise ValueError("LZW: first code after clear not literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            if len(table) < 4096:
-                table.append(entry)
-        else:
-            raise ValueError(f"LZW: code {code} beyond table")
-        out += entry
-        prev = entry
-        if limit is not None and len(out) >= limit:
-            break  # strip's expected byte count reached
-        # Early change with the decoder's one-entry LAG: the encoder
-        # grows width when ITS table size hits 2^w (TIFF6 p.61 /
-        # libtiff tif_lzw.c: "code 511 should be written with 10
-        # bits"); the decoder's table runs one entry behind, so it
-        # grows at 2^w - 1 (511/1023/2047) — exactly libtiff's
-        # `free_ent > nbitsmask - 1` with nbitsmask = (1<<nbits)-1.
-        # (r10 fix: was 2^w - 2, one too early — internally consistent
-        # with the old test encoder but desynced from real-world LZW.)
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1
-    return bytes(out)
+    return _lzw(read_code, 8, 1, limit)
 
 
 def decode_tiff(blob: bytes):
     """(h, w) uint8 grayscale or (h, w, 3) uint8 RGB pixels from an
     8-bit baseline TIFF (II or MM). Strip compressions handled for
-    real (r9): none (1), LZW (5, MSB-first early-change), Deflate
+    real: none (1), LZW (5, MSB-first early-change), Deflate
     (8 / legacy 32946, stdlib zlib), PackBits (32773); plus the
     horizontal-differencing predictor (tag 317 = 2) LZW/Deflate files
     almost always pair with, and 8-bit palette files (photometric 3,
-    ColorMap tag, 16-bit entries scaled to 8, r9). ValueError on
+    ColorMap tag, 16-bit entries scaled to 8). ValueError on
     malformed structure; NotImplementedError for tiled or non-8-bit
     files and JPEG-in-TIFF."""
     import struct
@@ -3728,8 +3591,8 @@ def decode_tiff(blob: bytes):
             if voff + total > len(b):
                 raise ValueError(f"tag {tag} value overruns file")
             vals = struct.unpack_from(e + type_fmt[typ] * cnt, b, voff)
-        if vals:  # r10 fuzz: a cnt=0 entry must read as missing, not
-            tags[tag] = list(vals)  # crash one() with an empty list
+        if vals:  # a cnt=0 entry reads as missing, not as an empty
+            tags[tag] = list(vals)  # list one() would index
 
     def one(tag, default=None):
         if tag in tags:
@@ -3748,7 +3611,7 @@ def decode_tiff(blob: bytes):
     if set(bits) != {8}:
         raise NotImplementedError(f"non-8-bit TIFF samples {bits}")
     cmap = None
-    if photo == 3:  # paletted (r9): ColorMap = 3 x 2^bits 16-bit rows
+    if photo == 3:  # paletted: ColorMap = 3 x 2^bits 16-bit rows
         if 320 not in tags:
             raise ValueError("paletted TIFF without ColorMap")
         cm = tags[320]
@@ -3763,7 +3626,7 @@ def decode_tiff(blob: bytes):
     if predictor not in (1, 2):
         raise NotImplementedError(f"TIFF predictor {predictor}")
     rps = one(278, h)
-    if w * h * spp > _MAX_DECODED_BYTES:  # r11 absolute bomb cap
+    if w * h * spp > _MAX_DECODED_BYTES:
         raise ValueError("TIFF decoded size exceeds cap")
     offsets = tags.get(273)
     counts = tags.get(279)
@@ -3776,17 +3639,16 @@ def decode_tiff(blob: bytes):
         raw = b[o : o + c]
         rows = min(rps, h - rps * si)
         expected = rows * w * spp
-        # r10 review: TIFF has no chunk CRCs, so the bomb guard runs
+        # TIFF has no chunk CRCs, so the bomb guard runs
         # both directions — a header-implied strip size beyond the
         # codec's expansion ceiling can't be legitimate (huge-dims,
         # tiny-data), and the decompressors are output-capped at
         # `expected` (small-dims, bomb-data: a 10 MB zeros-stream must
-        # not inflate to 10 GB inside a Spark task). Advisor r11: the
-        # ceiling is PER-CODEC — deflate tops out at 1032:1, but LZW
-        # with 12-bit codes over a 4094-entry table legitimately
-        # reaches ~2730:1 in theory (a 2048x2048 constant-gray LZW
-        # TIFF measures ~1050:1 and was being rejected as implausible),
-        # and PackBits at best 128:1; uncompressed strips never expand.
+        # not inflate to 10 GB inside a Spark task). The ceiling is
+        # PER-CODEC: deflate tops out at 1032:1, LZW with 12-bit codes
+        # over a 4094-entry table reaches ~2730:1 (a 2048x2048
+        # constant-gray LZW TIFF measures ~1050:1), PackBits 128:1,
+        # and uncompressed strips never expand.
         ceiling = {1: 1, 5: 2730, 32773: 128}.get(comp, 1032)
         if expected > ceiling * len(raw) + 4096:
             raise ValueError("strip dimensions implausible for data size")
@@ -3800,7 +3662,7 @@ def decode_tiff(blob: bytes):
 
             try:
                 strip = zlib.decompressobj().decompress(raw, cap)
-            except zlib.error as exc:  # r10 fuzz: not a ValueError
+            except zlib.error as exc:  # not a ValueError
                 raise ValueError(f"bad deflate strip: {exc}") from exc
         else:  # 32773
             strip = _tiff_packbits(raw, expected)
@@ -3857,7 +3719,7 @@ def _synth_tiff_exprs():
         )
 
     s = "__s"  # strip count column
-    # r9: odd doc_ids carry DEFLATE strips (compression 8) — each strip
+    # Odd doc_ids carry DEFLATE strips (compression 8) — each strip
     # its own zlib stream (header 0x7801, one stored block, Adler-32
     # folded in SQL over the strip's pixel formula), so the compressed
     # path is verified end-to-end under the same oracle. A stored-
@@ -3975,12 +3837,10 @@ def l8m_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL TIFF decode under an exact oracle: SQL-synthesized
     multi-strip little-endian grayscale TIFFs (full IFD with nine tags,
     out-of-line strip tables; odd doc_ids carry DEFLATE-compressed
-    strips as SQL-built zlib streams with SQL-folded Adler-32, r9) ->
+    strips as SQL-built zlib streams with SQL-folded Adler-32) ->
     IFD walk + per-strip decompression + assembly in mapInPandas ->
     exact pixel and position-weighted sums, re-derived by DuckDB from
     the pixel formula alone."""
-    import pandas as pd
-
     e = _synth_tiff_exprs()
     docs = (
         table(spark, sf_dir, "documents")
@@ -3993,40 +3853,7 @@ def l8m_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__px", F.expr(e["pixels"]))
         .select("doc_id", F.expr(e["tiff"]).alias("blob"))
     )
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("pixel_sum", LongType()),
-            StructField("pos_sum", LongType()),
-        ]
-    )
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ws, hs, sums, pws = [], [], [], []
-            for blob in pdf["blob"]:
-                px = decode_tiff(blob)
-                h, w = px.shape[:2]
-                flat = px.reshape(-1).astype(np.int64)
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(flat.sum()))
-                pws.append(int((flat * (np.arange(flat.size) + 1)).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "pixel_sum": pd.Series(sums, dtype="int64"),
-                    "pos_sum": pd.Series(pws, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(decode_batch, out_schema).orderBy("doc_id")
+    return _pixel_sums(docs, decode_tiff)
 
 
 def dispatch_media(blob: bytes) -> tuple[str, int, int]:
@@ -4040,43 +3867,31 @@ def dispatch_media(blob: bytes) -> tuple[str, int, int]:
     magic sniffs but whose body fails its decoder degrades to
     ("corrupt", 0, 0) — a 100 TB bucket always carries truncated and
     bit-rotted rows, and one such row must not kill the Spark task
-    hosting the batch (r10 fuzz sweep pins this: tools/
-    fuzz_multimodal.py + tests/test_multimodal_sniff.py)."""
+    hosting the batch (tools/fuzz_multimodal.py and
+    tests/test_multimodal_sniff.py pin this)."""
     import numpy as np
 
     fmt, _, _ = sniff_media(blob)
     try:
-        if fmt in ("ppm", "bmp", "png", "gif"):
-            px = decode_pixels(blob)
-            return (fmt, int(px.size), int(px.reshape(-1).astype(np.int64).sum()))
-        if fmt == "jpeg":  # native shape: gray stays (h, w) — decode_pixels
-            px = decode_jpeg(blob)  # would triple gray units by stacking
-            return (fmt, int(px.size), int(px.reshape(-1).astype(np.int64).sum()))
-        if fmt == "tiff":
-            px = decode_tiff(blob)
+        if fmt in ("ppm", "bmp", "png", "gif", "jpeg", "tiff"):
+            # jpeg/tiff keep their native shape: decode_pixels would
+            # triple a gray image's units by stacking it to RGB
+            decode = {"jpeg": decode_jpeg, "tiff": decode_tiff}.get(fmt, decode_pixels)
+            px = decode(blob)
             return (fmt, int(px.size), int(px.reshape(-1).astype(np.int64).sum()))
         if fmt == "wav":
             _rate, _ch, smp = decode_audio(blob)
-            # Advisor r11: IEEE-float WAVs (valid container) may carry
-            # NaN/Inf — the int64 cast is then undefined (platform
-            # INT64_MIN garbage in val_sum). Degrade to corrupt like
-            # any other undecodable body. r11 fuzz follow-up: a FINITE
-            # float outside int64 range (1e300 is a perfectly valid
-            # IEEE sample byte pattern) hits the same undefined cast —
-            # bound by 2^31, far above any real PCM encoding's range.
+            # IEEE-float WAVs may carry NaN/Inf or finite values past
+            # int64 (1e300 is a valid sample bit pattern), where the
+            # int64 cast is undefined; 2^31 is above any PCM range
             if smp.dtype.kind == "f" and not (
                 np.isfinite(smp).all()
                 and (smp.size == 0 or np.abs(smp).max() <= 2**31)
             ):
                 return ("corrupt", 0, 0)
             return (fmt, int(smp.size), int(smp.astype(np.int64).sum()))
-        if fmt == "flac":
+        if fmt == "flac":  # decode_flac always returns int64 samples
             _rate, _nch, smp = decode_flac(blob)
-            if smp.dtype.kind == "f" and not (
-                np.isfinite(smp).all()
-                and (smp.size == 0 or np.abs(smp).max() <= 2**31)
-            ):
-                return ("corrupt", 0, 0)
             return (fmt, int(smp.size), int(smp.reshape(-1).astype(np.int64).sum()))
         if fmt == "y4m":
             _w, _h, frames = decode_y4m(blob)
@@ -4096,8 +3911,7 @@ def dispatch_media(blob: bytes) -> tuple[str, int, int]:
 # formats by doc_id % 4 (each blob synthesized by the same SQL
 # machinery its dedicated query uses), and the oracle re-derives fmt,
 # unit count and value sum per doc from the formulas — a mis-sniffed
-# or mis-routed row cannot match. (r9: the l8o color JPEG joined the
-# rotation, widening it from % 3.)
+# or mis-routed row cannot match.
 # ---------------------------------------------------------------------------
 @register(
     "l8n_media_dispatch",

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
+
 from lens_warehouse_spark.llm.multimodal import (
     _synth_media_blob,
+    _tiff_lzw,
     decode_image,
+    lzw_decode,
     sniff_media,
 )
 
@@ -719,6 +723,59 @@ def test_lzw_kwkwk_pattern():
     assert lzw_decode(_lzw_encode(data, 8), 8) == data
 
 
+def _lzw_pack(codes, early, msb):
+    """Pack 8-bit-literal LZW codes with the width schedule of a
+    clear-free stream: the decoder's table starts at 258 entries, gains
+    one per code after the first up to 4096, and the width grows once
+    it holds 2^width - early entries, up to 12 bits."""
+    width, size, acc, nbits = 9, 258, 0, 0
+    for i, code in enumerate(codes):
+        if msb:
+            acc = (acc << width) | code
+        else:
+            acc |= code << nbits
+        nbits += width
+        if i and size < 4096:
+            size += 1
+        if size == (1 << width) - early and width < 12:
+            width += 1
+    if msb:
+        pad = -nbits % 8
+        return (acc << pad).to_bytes((nbits + pad) // 8, "big")
+    return acc.to_bytes((nbits + 7) // 8, "little")
+
+
+@pytest.mark.parametrize(
+    "decode, early, msb",
+    [(lambda data: lzw_decode(data, 8), 0, False), (_tiff_lzw, 1, True)],
+    ids=["gif", "tiff"],
+)
+def test_lzw_error_paths_and_table_cap(decode, early, msb):
+    """Both LZW flavours share one dictionary loop; pin its corrupt-stream
+    errors and that a clear-free stream stops growing the table at 4096
+    entries (12-bit codes cannot address more, so only memory shows it)."""
+    import tracemalloc
+
+    with pytest.raises(ValueError, match="first code after clear not literal"):
+        decode(b"\xff\xff\xff")
+    with pytest.raises(ValueError, match="first code after clear not literal"):
+        decode(_lzw_pack([65, 66, 256, 259], early, msb))
+    with pytest.raises(ValueError, match="code 300 beyond table"):
+        decode(_lzw_pack([65, 300], early, msb))
+
+    n = 100_000
+    stream = _lzw_pack([0] * n + [4095], early, msb)
+    tracemalloc.start()
+    try:
+        out = decode(stream)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out == bytes(n + 2)
+    # an uncapped table holds ~96k more 2-byte entries (~4 MB of objects)
+    assert peak < 2 << 20, peak
+
+
 def _gif_bytes(
     idx,
     palette,
@@ -1003,6 +1060,23 @@ def test_jpeg_decode_stuffed_bytes_and_negative_dc():
     blob, ref = _jpeg_bytes(px, q)
     assert b"\xff\x00" in blob[20:]  # stuffing actually exercised
     assert (decode_jpeg_gray(blob) == ref).all()
+
+
+@pytest.mark.parametrize("seed,keep", [("jpeg_gray", 1), ("jpeg_prog", 0)])
+def test_jpeg_scan_cut_on_bare_trailing_ff(seed, keep):
+    """A scan cut right after a 0xFF byte leaves no byte to check for
+    stuffing: the reader reports a marker at EOF as ValueError (which
+    the dispatch layer catches), not a TypeError from formatting it."""
+    import struct
+
+    from lens_warehouse_spark.llm.multimodal import decode_jpeg
+
+    blob = (_FUZZ_SEED_CACHE or build_fuzz_seeds())[seed]
+    sos = blob.index(b"\xff\xda")
+    start = sos + 2 + struct.unpack_from(">H", blob, sos + 2)[0]
+    assert b"\xff" not in blob[start : start + keep]
+    with pytest.raises(ValueError, match="0xFF<EOF>"):
+        decode_jpeg(blob[: start + keep] + b"\xff")
 
 
 def test_jpeg_decode_error_paths():
@@ -2043,17 +2117,17 @@ def test_flac_residual_rejects_order_ge_blocksize_at_porder0():
     and a ragged-channel numpy error downstream."""
     import pytest
 
-    from lens_warehouse_spark.llm.multimodal import _flac_residual, _FlacBits
+    from lens_warehouse_spark.llm.multimodal import _BitReader, _flac_residual
 
     # bits: method=00, porder=0000, then a Rice parameter — the check
     # fires before any residual is read
-    r = _FlacBits(bytes([0b00000000, 0, 0]), 0)
+    r = _BitReader(bytes([0b00000000, 0, 0]), 0)
     with pytest.raises(ValueError, match="partition order"):
         _flac_residual(r, order=4, blocksize=4)
     # boundary: blocksize == order + 1 is fine (one residual). Bits:
     # method(2)=0 porder(4)=0 param(4)=0, then unary residual '1' at
     # bit 10 -> quotient 0 -> residual value 0.
-    r = _FlacBits(bytes([0b00000000, 0b00100000, 0]), 0)
+    r = _BitReader(bytes([0b00000000, 0b00100000, 0]), 0)
     assert _flac_residual(r, order=3, blocksize=4) == [0]
 
 

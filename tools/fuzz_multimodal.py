@@ -1,4 +1,4 @@
-"""Standalone fuzz harness for the multimodal decoders (r9 verdict #7).
+"""Standalone fuzz harness for the multimodal decoders.
 
 Feeds VALID blobs of every format this module decodes through random
 truncations / bit-flips / byte deletions / insertions / dimension-field
@@ -19,21 +19,28 @@ re-runs a bounded slice of the same generator in-process once this
 harness is clean.
 
 Usage: python tools/fuzz_multimodal.py [n_per_seed] [master_seed]
-Prints one JSON line: {"n_cases": N, "findings": [...], "elapsed_s": S}
+Prints one JSON line: {"n_cases": N, "findings": [...], "n_findings": K,
+"outcome_sha256": D, "elapsed_s": S}. ``outcome_sha256`` digests every
+(fmt, case, fn) outcome — the returned value (arrays by dtype, shape and
+bytes) or the exception class name — so two commits that decode the
+same mutants identically print the same digest.
 Reproduce any finding by re-running with the same master_seed.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import os
 import resource
 import signal
 import sys
 import time
 import zlib
 
-sys.path.insert(0, ".")
-sys.path.insert(0, "tests")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 import numpy as np  # noqa: E402
 
@@ -52,6 +59,15 @@ def _alarm(_sig, _frm):
 # single source of truth in tests/test_multimodal_sniff.py.
 from test_multimodal_sniff import build_fuzz_seeds as build_seeds  # noqa: E402
 from test_multimodal_sniff import mutate_blob as mutate  # noqa: E402
+
+
+def _canon(v) -> bytes:
+    """Stable byte encoding of a decoder's return value."""
+    if isinstance(v, np.ndarray):
+        return b"nd:%s:%r:" % (v.dtype.str.encode(), v.shape) + v.tobytes()
+    if isinstance(v, (tuple, list)):
+        return b"(" + b",".join(_canon(x) for x in v) + b")"
+    return repr(v).encode()
 
 
 def decoder_matrix():
@@ -88,11 +104,11 @@ def main() -> None:
     decoders = decoder_matrix()
     findings: list[dict] = []
     n_cases = 0
+    digest = hashlib.sha256()
     t0 = time.monotonic()
     for fmt, seed_blob in seeds.items():
-        # crc32, not hash(): str hash is salted per process, which made
-        # a reported (fmt, case) unreproducible from the same master
-        # seed — the harness's whole repro contract (r10 review)
+        # crc32, not hash(): str hash is salted per process, and a
+        # reported (fmt, case) must reproduce from the same master seed
         rng = np.random.default_rng((master, zlib.crc32(fmt.encode())))
         for case in range(n_per_seed):
             op, blob = mutate(rng, seed_blob)
@@ -101,25 +117,30 @@ def main() -> None:
                 signal.setitimer(signal.ITIMER_REAL, 5.0)
                 t1 = time.monotonic()
                 try:
-                    fn(blob)
-                except ALLOWED:
+                    outcome = _canon(fn(blob))
+                except ALLOWED as e:
+                    outcome = type(e).__name__.encode()
                     if not may_raise:
                         findings.append(
                             {"fmt": fmt, "case": case, "op": op, "fn": name,
                              "kind": "raised_in_never_raise_layer"}
                         )
                 except DecodeTimeout:
+                    outcome = b"DecodeTimeout"
                     findings.append(
                         {"fmt": fmt, "case": case, "op": op, "fn": name,
                          "kind": "timeout>5s"}
                     )
                 except BaseException as e:  # the whole point of the harness
+                    outcome = type(e).__name__.encode()
                     findings.append(
                         {"fmt": fmt, "case": case, "op": op, "fn": name,
                          "kind": type(e).__name__, "msg": str(e)[:160]}
                     )
                 finally:
                     signal.setitimer(signal.ITIMER_REAL, 0.0)
+                digest.update(f"{fmt}\0{case}\0{name}\0".encode())
+                digest.update(hashlib.sha256(outcome).digest())
                 dt = time.monotonic() - t1
                 if dt > 2.0:
                     findings.append(
@@ -129,6 +150,7 @@ def main() -> None:
     print(json.dumps(
         {"n_cases": n_cases, "findings": findings[:200],
          "n_findings": len(findings),
+         "outcome_sha256": digest.hexdigest(),
          "elapsed_s": round(time.monotonic() - t0, 1)}
     ))
 
