@@ -977,7 +977,7 @@ def _chunk_strings_arrow():
     the same delimiter is an identity, so chunks are exact substrings
     of the original between every Nth space). Measured 28% faster than
     the interpreted concat_ws(slice(...)) lambda at 100x and exact on
-    adversarial spacing (tools/ab_l28.py). Built lazily per call:
+    adversarial spacing (`git show ce9889a:tools/ab_l28.py`). Built lazily per call:
     pandas_udf registration needs an active SparkSession."""
     n = _L28_N
 
@@ -1079,7 +1079,7 @@ def l28_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunks CTE: (doc_id, __c chunk strings, __ch chunk hashes),
     # MEMORY_AND_DISK, probe explodes __ch off it, scrub filters +
     # md5's __c off it — zero re-tokenize, zero join, checksum-equal
-    # output (tools/ab_l28_persist.py). Paired interleaved at 1000x,
+    # output (`git show ce9889a:tools/ab_l28_persist.py`). Paired interleaved at 1000x,
     # idle-gated: current [21.99, 18.52, 23.00] vs persist
     # [27.43, 20.59, 24.98] s — the variant loses ~11% at best-of
     # and GCLocker allocation retries reappear (the milder cousin of

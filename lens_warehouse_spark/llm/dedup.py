@@ -167,7 +167,8 @@ def minhash_signatures(
     # calls per seed — the aggregate tree is identical (each SQL integer
     # literal `{seed}` is an INT like the F.lit(seed) it replaces, so
     # every seeded hash value is bit-identical), but plan CONSTRUCTION
-    # drops from ~0.33 s to ~0.10 s per invocation (profile_build,
+    # drops from ~0.33 s to ~0.10 s per invocation (build-only timing,
+    # `git show ce9889a:tools/profile_build.py`;
     # l2's build was 43% of its 0.76 s power time; guide §7.3 —
     # planning cost is driver-side, single-threaded, and contends on
     # the GIL across the 16-stream throughput batch).

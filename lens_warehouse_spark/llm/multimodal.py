@@ -1738,6 +1738,8 @@ def decode_gif(blob: bytes):
         if pos >= len(b):
             raise ValueError("truncated before LZW min code size")
         min_code_size = b[pos]
+        if not 2 <= min_code_size <= 8:
+            raise ValueError(f"GIF LZW minimum code size {min_code_size} outside 2..8")
         pos += 1
         data = bytearray()
         while pos < len(b) and b[pos] != 0:

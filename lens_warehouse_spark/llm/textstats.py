@@ -648,7 +648,8 @@ def l13_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df agg map-side combines to vocabulary-sized shuffle rows. At
     # 100 TB tf is a staged table feeding both aggregates.
     #
-    # NEGATIVE A/B (round 6, tools/ab_l13.py, idle best-of-3): the
+    # NEGATIVE A/B (round 6, idle best-of-3; the script is
+    # `git show ce9889a:tools/ab_l13.py`): the
     # gram-hash rule does NOT transfer here. A hash-first variant
     # (tf/df over xxhash64(term), rank()<=3 overfetch keeps boundary
     # ties, term text joined back only for the ~3/doc superset)

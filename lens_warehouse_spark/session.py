@@ -72,19 +72,6 @@ def get_spark(
             "spark.sql.join.preferSortMergeJoin",
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
         )
-        # Shuffle/spill codec, env-parameterised (r14 opt round, guide
-        # §2.3): default stays Spark's lz4 — local-mode sf0.1 shuffles
-        # are KB-scale AQE-coalesced loopback transfers where the
-        # codec trade has nothing to buy (no NIC, no disk pressure), so
-        # no local bench movement is expected or claimed. On a real
-        # cluster zstd's markedly better ratio cuts network shuffle
-        # bytes for a bit more CPU (see SCALE.md); set
-        # SPARK_GRAFT_SHUFFLE_CODEC=zstd there and measure shuffle
-        # bytes written + stage time per guide §2.3.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"),
-        )
         # FAIR scheduling so concurrent query streams (bench throughput
         # run, any multi-tenant caller) share executors instead of
         # FIFO head-of-line blocking. No effect on single-stream runs.

@@ -850,6 +850,20 @@ def test_gif_decode_error_paths():
         decode_gif(good[:11])  # truncated LSD
 
 
+@pytest.mark.parametrize("size", [0, 1, 9, 12, 255])
+def test_gif_rejects_lzw_min_code_size_outside_2_to_8(size):
+    import numpy as np
+
+    from lens_warehouse_spark.llm.multimodal import decode_gif
+
+    good = _gif_bytes(np.zeros((3, 3), dtype=np.uint8), np.zeros((256, 3), dtype=np.uint8))
+    at = 13 + 256 * 3 + 10  # header, global color table, image descriptor
+    assert good[at] == 8
+    bad = good[:at] + bytes([size]) + good[at + 1 :]
+    with pytest.raises(ValueError, match=f"GIF LZW minimum code size {size} outside 2..8"):
+        decode_gif(bad)
+
+
 def test_gif_interlace_and_local_palette_roundtrip():
     """r9: interlaced row order and local-color-table GIFs decode for
     real. The local table rides with a DECOY global table, so reading

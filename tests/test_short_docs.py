@@ -129,7 +129,7 @@ def test_l9_label_vocabulary_paths_agree(spark, short_sf_dir, monkeypatch):
 
 def test_l28_arrow_chunker_matches_lambda_on_adversarial_spacing(spark):
     """The l28 chunk strings are built by an Arrow pandas_udf (measured
-    -28% at 100x, tools/ab_l28.py); its contract is EXACT equality with
+    -28% at 100x, `git show ce9889a:tools/ab_l28.py`); its contract is EXACT equality with
     the interpreted concat_ws(slice(tokens, ...)) form — split+join on
     ' ' is an identity, so chunks are the original text cut at every
     Nth space. Guard the edge cases a chunker gets wrong: empty text,

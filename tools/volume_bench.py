@@ -199,8 +199,16 @@ def wait_for_idle(
     }
 
 
-def _best_of(fn, reps: int = 3, setup=None) -> float:
-    return min(_timed_reps(fn, reps=reps, setup=setup))
+def checksum(df):
+    """The one-row (n, h) aggregate of ``df``: its row count and the
+    decimal sum of ``xxhash64`` over every column. Hashing every column
+    makes the full expression tree execute, engine-side, with no client
+    conversion. The sum is decimal because an ANSI BIGINT sum of 64-bit
+    hashes overflows (DuckDB's UBIGINT sum widens to HUGEINT itself)."""
+    from pyspark.sql import functions as F
+
+    h = F.xxhash64(*[F.col(f"`{c}`") for c in df.columns]).cast("decimal(38,0)")
+    return df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h"))
 
 
 def _timed_reps(fn, reps: int = 3, setup=None) -> list[float]:
@@ -220,22 +228,13 @@ def _timed_reps(fn, reps: int = 3, setup=None) -> list[float]:
 
 
 def run_spark_subset(spark, sf_dir: str, names=VOLUME_SUBSET) -> dict[str, float]:
-    from pyspark.sql import functions as F
-
     out = {}
     for name in names:
         fn = registry.QUERIES[name]
 
-        # Checksum harness (see run_duckdb_subset for the symmetry
-        # argument): hash every output column into one aggregate so the
-        # full expression tree executes, engine-side, with no client
-        # conversion.
+        # Checksum harness (see run_duckdb_subset for the symmetry argument).
         def run(fn=fn):
-            df = fn(spark, sf_dir)
-            # decimal sum: an ANSI BIGINT sum of 64-bit hashes overflows
-            # (DuckDB's UBIGINT sum widens to HUGEINT automatically)
-            h = F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)")
-            df.agg(F.count(F.lit(1)), F.sum(h)).collect()
+            checksum(fn(spark, sf_dir)).collect()
 
         # clearCache PER REP (bench.py's 'no cross-rep cache assists'
         # rule): l13/l31 pin shared subtrees, so clearing only once let
@@ -352,16 +351,10 @@ def volume_scaling_report(spark, base_sf_dir: str, mult: int = 10) -> dict:
     # there for every rep>1 under the old protocol, and DuckDB's side
     # (measured after Spark's) inherits the same file warmth as
     # before.
-    from pyspark.sql import functions as F
-
     for warm_sf in (base_sf_dir, scaled_dir):
         for name in VOLUME_SUBSET:
             try:
-                df = registry.QUERIES[name](spark, warm_sf)
-                h = F.xxhash64(*[F.col(c) for c in df.columns]).cast(
-                    "decimal(38,0)"
-                )
-                df.agg(F.count(F.lit(1)), F.sum(h)).collect()
+                checksum(registry.QUERIES[name](spark, warm_sf)).collect()
             except Exception:  # noqa: BLE001 - warmup is best-effort
                 pass
             # r12: clear per QUERY, exactly as the timed phase's per-rep
