@@ -8,7 +8,10 @@ Checks, per representative query:
 - no row-at-a-time Python UDF in hot paths (BatchEvalPython only in x1)
 
 Writes PLANS.md with the formatted plans + assertion results.
-Usage: python tools/explain_report.py [sf_dir]
+Usage: python tools/explain_report.py [sf_dir] [--diff] [--save]
+  --diff  compare normalized plans with tools/plan_baseline.json; exit 1
+          on any DRIFT (plan changed) or NEW (no baseline) entry
+  --save  rewrite tools/plan_baseline.json from this run
 """
 
 from __future__ import annotations
@@ -550,6 +553,12 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         ("no cartesian product", "!CartesianProduct"),
         ("no row-at-a-time python", "!BatchEvalPython"),
     ],
+    # u5b tagged visit-level cohort: one branch per atom, unioned, then
+    # the same bitmask gate, combined map-side before its one shuffle.
+    "u5b_cohort_visit_counts": [
+        ("tagged union of per-atom branches", "Union"),
+        ("map-side partial bitmask combine", "partial_bit_or"),
+    ],
     # u5d fused cohort: tagged UNION of predicate branches -> ONE
     # bitmask aggregate — the one-shuffle CNF plan (cohort.py).
     "u5d_cohort_visit_counts_fused": [
@@ -747,6 +756,7 @@ def main() -> int:
 
         for name, now in sorted(snapshots.items()):
             if name not in baseline:
+                drifted.append(name)
                 print(f"NEW  {name}: no baseline plan")
                 continue
             if baseline[name] != now:
@@ -766,7 +776,9 @@ def main() -> int:
         with open(baseline_path, "w") as f:
             json.dump(snapshots, f, indent=1, sort_keys=True)
         print(f"baseline saved: {baseline_path}")
-    return 1 if failures else 0
+    # A drifted or unbaselined plan fails like a failed check: re-save
+    # with --save only once the new plan is confirmed intended.
+    return 1 if failures or drifted else 0
 
 
 if __name__ == "__main__":
