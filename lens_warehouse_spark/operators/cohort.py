@@ -18,10 +18,11 @@ Spark-first re-expression:
   reduce(union) within disjunctions, reduce(intersect) across. Each
   intersect is its own shuffle — O(n_disjunctions) shuffles.
 - The scaled plan (``compile_tagged``) rewrites CNF into ONE shuffle:
-  union all disjunction key-sets tagged with their disjunction index,
-  then gate each key on having seen every tag — folded into a BIGINT
-  bitmask with ``bit_or(1 << tag)`` (``_cnf_gate``), one partial-
-  aggregable shuffle, no distinct expansion.
+  union all atom key-sets tagged with their disjunction index (the
+  (atom, tag) list of ``_work``: tag i for disjunction i, tag n for an
+  exclusion), then gate each key on having seen every tag — folded into
+  a BIGINT bitmask with ``bit_or(1 << tag)`` (``_cnf_gate``), one
+  partial-aggregable shuffle, no distinct expansion.
   At 100 TB this is the difference between n sort-merge set ops over
   the subject universe and a single hash aggregation.
 
@@ -32,12 +33,15 @@ subject / visit / data-point layering.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lens_warehouse_spark.catalog import maybe_broadcast, table
+from lens_warehouse_spark.catalog import maybe_broadcast, table, table_rows
 
 SUBJECT_KEY = "subject_id"
 
@@ -104,11 +108,10 @@ class LineitemAtom(Atom):
 
     def keys(self, spark: SparkSession, sf_dir: str) -> DataFrame:
         li = table(spark, sf_dir, "lineitem").filter(_atom_condition(self))
-        od = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        return (
-            li.select("l_orderkey")
-            .join(od, F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(F.col("o_custkey").alias(SUBJECT_KEY))
+        return _via_orders(
+            li.select("l_orderkey"),
+            table(spark, sf_dir, "orders"),
+            F.col("o_custkey").alias(SUBJECT_KEY),
         )
 
 
@@ -133,18 +136,33 @@ class CohortQuery:
 # ---------------------------------------------------------------------------
 # Compilation strategies.
 # ---------------------------------------------------------------------------
+def _work(query: CohortQuery) -> list[tuple[Atom, int]]:
+    """The (atom, tag) list every tagged plan unions: tag i for each atom
+    of disjunction i, tag n (= number of disjunctions) for exclusions."""
+    n = len(query.disjunctions)
+    return [(a, i) for i, d in enumerate(query.disjunctions) for a in d] + [
+        (e, n) for e in query.exclusions
+    ]
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _via_orders(li: DataFrame, od: DataFrame, *cols) -> DataFrame:
+    """Lineitem rows joined to their order (the data-point -> visit ->
+    subject traversal); ``od`` is the caller's orders frame."""
+    return li.join(
+        od.select("o_orderkey", "o_custkey"),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    ).select(*cols)
+
+
 def _disjunction_keys(
-    spark: SparkSession, sf_dir: str, atoms: tuple[Atom, ...], distinct: bool = True
+    spark: SparkSession, sf_dir: str, atoms: tuple[Atom, ...]
 ) -> DataFrame:
-    """Union of atom key-sets. ``distinct=False`` skips the per-disjunction
-    dedup shuffle — used by the tagged plan, whose final bitmask-gate
-    aggregation is insensitive to duplicate (key, tag) rows, making the
-    whole CNF genuinely one shuffle."""
-    dfs = [a.keys(spark, sf_dir) for a in atoms]
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out.distinct() if distinct else out
+    """Distinct union of one disjunction's atom key-sets."""
+    return _union([a.keys(spark, sf_dir) for a in atoms]).distinct()
 
 
 def compile_naive(
@@ -152,12 +170,9 @@ def compile_naive(
 ) -> DataFrame:
     """Reference-shaped plan: union within, chained intersect across."""
     sets = [_disjunction_keys(spark, sf_dir, d) for d in query.disjunctions]
-    out = sets[0]
-    for s in sets[1:]:
-        out = out.intersect(s)
+    out = reduce(DataFrame.intersect, sets)
     for e in query.exclusions:
-        excl = e.keys(spark, sf_dir)
-        out = out.join(excl, SUBJECT_KEY, "left_anti")
+        out = out.join(e.keys(spark, sf_dir), SUBJECT_KEY, "left_anti")
     return out
 
 
@@ -196,6 +211,15 @@ def _cnf_gate(union: DataFrame, n: int, *keys: str) -> DataFrame:
     )
 
 
+def _compile_tagged(
+    query: CohortQuery, frame: Callable[[Atom], DataFrame], *keys: str
+) -> DataFrame:
+    """Union every atom's ``frame`` tagged per ``_work``, then gate.
+    Tagging per atom plans the same as tagging each disjunction's union:
+    Catalyst pushes the tag projection through the union."""
+    union = _union([frame(a).withColumn("tag", F.lit(t)) for a, t in _work(query)])
+    return _cnf_gate(union, len(query.disjunctions), *keys)
+
 
 def compile_tagged(
     query: CohortQuery, spark: SparkSession, sf_dir: str
@@ -205,24 +229,7 @@ def compile_tagged(
     Exclusions ride along as an extra tag whose presence disqualifies,
     so the whole CNF (including NOT) is a single hash aggregation.
     """
-    n = len(query.disjunctions)
-    tagged = [
-        _disjunction_keys(spark, sf_dir, d, distinct=False).withColumn("tag", F.lit(i))
-        for i, d in enumerate(query.disjunctions)
-    ]
-    union = tagged[0]
-    for t in tagged[1:]:
-        union = union.unionByName(t)
-    excl_tag = F.lit(n)
-    for e in query.exclusions:
-        union = union.unionByName(
-            e.keys(spark, sf_dir).withColumn("tag", excl_tag)
-        )
-    return _cnf_gate(union, n, SUBJECT_KEY)
-
-
-# Canonical footer-stats row count lives in catalog.py (one cache).
-from lens_warehouse_spark.catalog import table_rows  # noqa: E402
+    return _compile_tagged(query, lambda a: a.keys(spark, sf_dir), SUBJECT_KEY)
 
 
 def estimate_plan_cost(
@@ -238,7 +245,7 @@ def estimate_plan_cost(
     whole CNF into a single hash aggregation; ``fused`` additionally
     collapses same-table atoms into one scan.
     """
-    atoms = [a for d in query.disjunctions for a in d] + list(query.exclusions)
+    atoms = [a for a, _ in _work(query)]
     n_disj = len(query.disjunctions)
     n_excl = len(query.exclusions)
     n_li = sum(isinstance(a, LineitemAtom) for a in atoms)
@@ -256,12 +263,8 @@ def estimate_plan_cost(
         + (weight("orders") if isinstance(a, LineitemAtom) else 0)
         for a in atoms
     )
-    # compile_fused's lineitem branch opens its OWN orders scan for the
-    # o_orderkey -> o_custkey traversal, SEPARATE from any orders tag
-    # scan — so the traversal scan is added on top of the atom-table
-    # set rather than deduped into it (a set-union here undercounted
-    # the fused plan by a full orders scan whenever the query mixed
-    # order-level and lineitem-level atoms).
+    # compile_fused's lineitem traversal scans orders separately from any
+    # orders tag scan, so it is added on top of the atom-table set.
     per_table = sum(weight(t) for t in atom_tables) + (
         weight("orders") if n_li else 0
     )
@@ -284,9 +287,8 @@ def choose_strategy(query: CohortQuery, sf_dir: str | None = None) -> str:
     mirrors compile_fused's own fallback, but choosing it up front keeps
     the reported choice honest.
     """
-    atoms = [a for d in query.disjunctions for a in d] + list(query.exclusions)
     costs = estimate_plan_cost(query, sf_dir)
-    if not all(type(a) in _ATOM_SOURCE for a in atoms):
+    if not _fusable(query):
         del costs["fused"]
     return min(costs, key=lambda s: (costs[s]["shuffles"], costs[s]["scans"]))
 
@@ -299,7 +301,7 @@ def cohort_members(
     fn = {
         "tagged": compile_tagged,
         "naive": compile_naive,
-        "fused": lambda q, s, d: compile_fused(q, s, d),
+        "fused": compile_fused,
     }[strategy]
     return fn(query, spark, sf_dir)
 
@@ -378,6 +380,23 @@ _ATOM_SOURCE = {SubjectAttr: "customer", OrderAtom: "orders", LineitemAtom: "lin
 _SOURCE_KEY = {"customer": "c_custkey", "orders": "o_custkey", "lineitem": None}
 
 
+def _fusable(query: CohortQuery) -> bool:
+    """Every atom has a row condition (``_atom_condition``)."""
+    return all(type(a) in _ATOM_SOURCE for a, _ in _work(query))
+
+
+def _tag_scan(src: DataFrame, atoms: list[tuple[Atom, int]], *cols) -> DataFrame:
+    """One pass over ``src``: keep rows matching any atom and emit one
+    (``cols``, tag) row per atom the row satisfies."""
+    # Each condition Column is built once and reused by the tag array and
+    # the prefilter: half the Py4J calls of the compiler's hottest loop.
+    conds = [(_atom_condition(a), tag) for a, tag in atoms]
+    tags = F.array(*[F.when(c, F.lit(tag)) for c, tag in conds])
+    return src.filter(reduce(operator.or_, [c for c, _ in conds])).select(
+        *cols, F.explode(F.filter(tags, lambda x: x.isNotNull())).alias("tag")
+    )
+
+
 def compile_fused(
     query: CohortQuery, spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -387,56 +406,29 @@ def compile_fused(
     sets routinely have dozens of atoms over the same observation table,
     so at 100 TB the scan count dominates. Here every source table is
     scanned ONCE: each row emits the tags of all atoms it satisfies
-    (explode of a when()-guarded tag array), then the same single-shuffle
-    one bitmask-gate shuffle (_cnf_gate) finishes the CNF. Falls back to compile_tagged
-    for atom types without fusion support (e.g. StaticAtom).
+    (``_tag_scan``), then the same single bitmask-gate shuffle
+    (_cnf_gate) finishes the CNF. Falls back to compile_tagged for atom
+    types without fusion support (e.g. StaticAtom).
     """
-    n = len(query.disjunctions)
-    work: list[tuple[Atom, int]] = [
-        (a, i) for i, d in enumerate(query.disjunctions) for a in d
-    ] + [(e, n) for e in query.exclusions]
-    if not all(type(a) in _ATOM_SOURCE for a, _ in work):
+    if not _fusable(query):
         return compile_tagged(query, spark, sf_dir)
-
     per_table: dict[str, list[tuple[Atom, int]]] = {}
-    for a, tag in work:
+    for a, tag in _work(query):
         per_table.setdefault(_ATOM_SOURCE[type(a)], []).append((a, tag))
 
     parts: list[DataFrame] = []
     for tname, atoms in per_table.items():
         src = table(spark, sf_dir, tname)
-        # r13 (opt round 1): build each atom's condition Column ONCE and
-        # reuse it in both the tag array and the any-match prefilter —
-        # Column objects are immutable expression handles, so reuse is
-        # free and halves the Py4J construction calls of the compiler's
-        # hottest loop (guide §7.3: plan-construction cost).
-        conds = [(_atom_condition(a), tag) for a, tag in atoms]
-        tag_array = F.array(*[F.when(c, F.lit(tag)) for c, tag in conds])
-        any_cond = None
-        for c, _ in conds:
-            any_cond = c if any_cond is None else (any_cond | c)
-        tagged = (
-            src.filter(any_cond)
-            .select(
-                *( [F.col("l_orderkey")] if tname == "lineitem"
-                   else [F.col(_SOURCE_KEY[tname]).alias(SUBJECT_KEY)] ),
-                F.explode(
-                    F.filter(tag_array, lambda x: x.isNotNull())
-                ).alias("tag"),
-            )
-        )
         if tname == "lineitem":
-            od = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-            tagged = (
-                tagged.join(od, F.col("l_orderkey") == F.col("o_orderkey"))
-                .select(F.col("o_custkey").alias(SUBJECT_KEY), "tag")
+            tagged = _tag_scan(src, atoms, F.col("l_orderkey"))
+            od = table(spark, sf_dir, "orders")
+            parts.append(
+                _via_orders(tagged, od, F.col("o_custkey").alias(SUBJECT_KEY), "tag")
             )
-        parts.append(tagged)
-
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    return _cnf_gate(union, n, SUBJECT_KEY)
+        else:
+            key = F.col(_SOURCE_KEY[tname]).alias(SUBJECT_KEY)
+            parts.append(_tag_scan(src, atoms, key))
+    return _cnf_gate(_union(parts), len(query.disjunctions), SUBJECT_KEY)
 
 
 # ---------------------------------------------------------------------------
@@ -448,34 +440,24 @@ def compile_fused(
 VISIT_KEY = "visit_id"
 
 
+def _visit_cols() -> tuple:
+    return F.col("o_custkey").alias(SUBJECT_KEY), F.col("o_orderkey").alias(VISIT_KEY)
+
+
 def _visit_keys(atom: Atom, spark: SparkSession, sf_dir: str) -> DataFrame:
     """(subject_id, visit_id) pairs whose visit satisfies the atom.
     Subject-level atoms qualify ALL visits of matching subjects."""
     od = table(spark, sf_dir, "orders")
     if isinstance(atom, OrderAtom):
-        return od.filter(_atom_condition(atom)).select(
-            F.col("o_custkey").alias(SUBJECT_KEY),
-            F.col("o_orderkey").alias(VISIT_KEY),
-        )
+        return od.filter(_atom_condition(atom)).select(*_visit_cols())
     if isinstance(atom, LineitemAtom):
         li = table(spark, sf_dir, "lineitem").filter(_atom_condition(atom))
-        return (
-            li.select("l_orderkey")
-            .join(od.select("o_orderkey", "o_custkey"),
-                  F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(
-                F.col("o_custkey").alias(SUBJECT_KEY),
-                F.col("o_orderkey").alias(VISIT_KEY),
-            )
-        )
+        return _via_orders(li.select("l_orderkey"), od, *_visit_cols())
     if isinstance(atom, SubjectAttr):
         subjects = atom.keys(spark, sf_dir)
         return od.join(
             subjects, od.o_custkey == F.col(SUBJECT_KEY), "left_semi"
-        ).select(
-            F.col("o_custkey").alias(SUBJECT_KEY),
-            F.col("o_orderkey").alias(VISIT_KEY),
-        )
+        ).select(*_visit_cols())
     raise TypeError(f"atom {type(atom).__name__} has no visit-level form")
 
 
@@ -484,17 +466,9 @@ def compile_visits_tagged(
 ) -> DataFrame:
     """Visit-level CNF: same one-shuffle tagged aggregation, keyed by
     (subject_id, visit_id)."""
-    n = len(query.disjunctions)
-    parts: list[DataFrame] = []
-    for i, d in enumerate(query.disjunctions):
-        for a in d:
-            parts.append(_visit_keys(a, spark, sf_dir).withColumn("tag", F.lit(i)))
-    for e in query.exclusions:
-        parts.append(_visit_keys(e, spark, sf_dir).withColumn("tag", F.lit(n)))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    return _cnf_gate(union, n, SUBJECT_KEY, VISIT_KEY)
+    return _compile_tagged(
+        query, lambda a: _visit_keys(a, spark, sf_dir), SUBJECT_KEY, VISIT_KEY
+    )
 
 
 def cohort_visit_counts(
@@ -515,82 +489,29 @@ def compile_visits_fused(
     pass evaluates every order-level and subject-level atom as a row
     condition (subject attrs are just columns of the joined row);
     lineitem atoms ride a single lineitem ⋈ orders branch. Same single
-    bitmask-gate shuffle (_cnf_gate) as compile_visits_tagged.
-
-    REJECTED A/B (r14 opt round, AB_U5D_r14.json): repartitioning the
-    tagged union by subject_id before the gate shares ONE exchange
-    between the gate's (subject, visit) group-by and u5d's downstream
-    countDistinct(subject) expansion (HashPartitioning(subject)
-    satisfies both), measured ~10% faster at sf0.1 — but ONLY because
-    one stage's fixed cost disappears at toy scale. It forfeits the
-    map-side partial bit_or, so the surviving exchange carries RAW
-    occurrence rows: 296k vs 132k combined pairs at sf0.1 (2.1x the
-    bytes), keyed by subject alone (hot-subject skew; aggregation
-    exchanges are not AQE-skew-splittable). At the 100 TB design point
-    shuffle bytes dominate stage count — keep the combine. Don't
-    re-try without a real cluster measurement."""
-    n = len(query.disjunctions)
-    work: list[tuple[Atom, int]] = [
-        (a, i) for i, d in enumerate(query.disjunctions) for a in d
-    ] + [(e, n) for e in query.exclusions]
-    if not all(type(a) in _ATOM_SOURCE for a, _ in work):
+    bitmask-gate shuffle (_cnf_gate) as compile_visits_tagged, combined
+    map-side: repartitioning the union by subject before the gate was
+    rejected (AB_U5D_r14.json) for 2.1x the exchange bytes at sf0.1."""
+    if not _fusable(query):
         return compile_visits_tagged(query, spark, sf_dir)
-
     od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer")
-    # LEFT join, not inner (r13 relational campaign, all-null/dangling
-    # FK corpora): an order with no matching customer row must still
-    # have its ORDER-level atoms evaluated — the inner join silently
-    # dropped such visits from every atom, diverging from the unfused
-    # path, where _visit_keys joins customer only for SubjectAttr
-    # atoms (left_semi: no customer row = that atom false, which is
-    # exactly what a NULL-valued when() condition yields here).
+    # LEFT join: an order with no customer row keeps its order-level
+    # atoms; its subject atoms read NULL, i.e. false, as in _visit_keys.
     base = od.join(
         maybe_broadcast(cu, sf_dir, "customer"),
         od.o_custkey == cu.c_custkey,
         "left",
     )
-
+    work = _work(query)
     row_atoms = [(a, t) for a, t in work if not isinstance(a, LineitemAtom)]
     li_atoms = [(a, t) for a, t in work if isinstance(a, LineitemAtom)]
 
     parts: list[DataFrame] = []
     if row_atoms:
-        # condition Columns built once, reused (see compile_fused r13)
-        conds = [(_atom_condition(a), t) for a, t in row_atoms]
-        tag_array = F.array(*[F.when(c, F.lit(t)) for c, t in conds])
-        any_cond = None
-        for c, _ in conds:
-            any_cond = c if any_cond is None else (any_cond | c)
-        parts.append(
-            base.filter(any_cond).select(
-                F.col("o_custkey").alias(SUBJECT_KEY),
-                F.col("o_orderkey").alias(VISIT_KEY),
-                F.explode(F.filter(tag_array, lambda x: x.isNotNull())).alias("tag"),
-            )
-        )
+        parts.append(_tag_scan(base, row_atoms, *_visit_cols()))
     if li_atoms:
         li = table(spark, sf_dir, "lineitem")
-        conds = [(_atom_condition(a), t) for a, t in li_atoms]
-        tag_array = F.array(*[F.when(c, F.lit(t)) for c, t in conds])
-        any_cond = None
-        for c, _ in conds:
-            any_cond = c if any_cond is None else (any_cond | c)
-        tagged = li.filter(any_cond).select(
-            "l_orderkey",
-            F.explode(F.filter(tag_array, lambda x: x.isNotNull())).alias("tag"),
-        )
-        parts.append(
-            tagged.join(
-                od.select("o_orderkey", "o_custkey"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            ).select(
-                F.col("o_custkey").alias(SUBJECT_KEY),
-                F.col("o_orderkey").alias(VISIT_KEY),
-                "tag",
-            )
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    return _cnf_gate(union, n, SUBJECT_KEY, VISIT_KEY)
+        tagged = _tag_scan(li, li_atoms, "l_orderkey")
+        parts.append(_via_orders(tagged, od, *_visit_cols(), "tag"))
+    return _cnf_gate(_union(parts), len(query.disjunctions), SUBJECT_KEY, VISIT_KEY)

@@ -7,6 +7,7 @@ Python set algebra, for arbitrary CNF structures.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -212,3 +213,32 @@ def test_stats_fed_cost_model():
     # collapses the repeated lineitem scans; verify the numbers are
     # row-scaled (lineitem rows show up in the scan term)
     assert stats["tagged"]["scans"] > table_rows(_SF, "lineitem")
+
+
+@pytest.mark.parametrize("n", [62, 63, 64])
+def test_cnf_gate_matches_set_algebra_around_the_bitmask_width(spark, n):
+    """_cnf_gate folds tags into a BIGINT bitmask below 63 disjunctions and
+    falls back to countDistinct from 63 on; both sides of the switch must
+    keep exactly the keys that saw every tag 0..n-1 and never tag n."""
+    from lens_warehouse_spark.operators.cohort import _cnf_gate
+
+    rng = _random.Random(n)
+    every = set(range(n))
+    tags_of = {
+        0: every,
+        1: every | {n},  # excluded
+        2: every - {n - 1},  # misses the highest disjunction bit
+        3: every - {0},
+    }
+    for s in range(4, 12):
+        tags_of[s] = {t for t in every if rng.random() < 0.97} | (
+            {n} if rng.random() < 0.3 else set()
+        )
+    rows = [(s, t) for s, tags in tags_of.items() for t in sorted(tags)]
+    rows += rows[::5]  # duplicate (key, tag) rows must not matter
+    union = spark.createDataFrame(rows, "subject_id long, tag int")
+
+    got = {r.subject_id for r in _cnf_gate(union, n, "subject_id").collect()}
+    expected = {s for s, tags in tags_of.items() if every <= tags and n not in tags}
+    assert 0 in expected and {1, 2, 3}.isdisjoint(expected)
+    assert got == expected

@@ -15,12 +15,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 from bench import HEADLINE
 from lens_warehouse_spark import registry
-from lens_warehouse_spark.catalog import TABLES
 from lens_warehouse_spark.session import get_spark
+from tools.check_parity import duck_connection
 
 
 def main() -> None:
@@ -28,12 +26,7 @@ def main() -> None:
     names = sys.argv[2:] or HEADLINE
     registry.load_all()
     spark = get_spark("bench-ratio")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_connection(sf_dir)
 
     rows = []
     for name in names:

@@ -35,6 +35,7 @@ import duckdb
 
 from lens_warehouse_spark import registry
 from lens_warehouse_spark.catalog import TABLES
+from tools.check_parity import duck_connection
 
 # Volume-bearing headline subset: per-row work (tokenization, n-grams,
 # regex, sessionization) dominates these, not job overhead.
@@ -248,13 +249,7 @@ def run_duckdb_subset(sf_dir: str, names=VOLUME_SUBSET) -> dict[str, float]:
     out = {}
     for name in names:
         sql = registry.ORACLES[name]
-        con = duckdb.connect()  # fresh per query: no cross-query caching
-        for t in TABLES:
-            path = f"{sf_dir}/{t}.parquet"
-            src = f"{path}/*.parquet" if os.path.isdir(path) else path
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
-            )
+        con = duck_connection(sf_dir)  # fresh per query: no cross-query caching
         # Checksum harness — the SYMMETRIC timing protocol. The naive
         # forms are both wrong: Spark-.count() vs DuckDB-fetchall()
         # charges DuckDB for full materialization + Python conversion
