@@ -749,9 +749,11 @@ def main() -> int:
         print(f"FAIL {name}: {desc}")
 
     drifted = []
-    if "--diff" in flags and os.path.exists(baseline_path):
-        with open(baseline_path) as f:
-            baseline = json.load(f)
+    if "--diff" in flags:
+        baseline = {}  # a missing baseline makes every plan NEW
+        if os.path.exists(baseline_path):
+            with open(baseline_path) as f:
+                baseline = json.load(f)
         import difflib
 
         for name, now in sorted(snapshots.items()):
