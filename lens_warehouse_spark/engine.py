@@ -187,10 +187,9 @@ class LensWarehouse:
         q = emb.filter(F.col("vec_id") == query_vec_id).select(
             F.col("embedding").alias("q_emb")
         )
-        # r8 adversarial pass: a nonexistent probe id used to produce
-        # an EMPTY result (empty broadcast side x candidates = zero
-        # rows) — indistinguishable from "no neighbors", the silent
-        # wrong answer. A point lookup is one pruned-scan job; pay it.
+        # A nonexistent probe id must raise: its empty broadcast side
+        # would return zero rows, indistinguishable from "no
+        # neighbors". A point lookup is one pruned-scan job; pay it.
         if not q.take(1):
             raise KeyError(
                 f"vec_id {query_vec_id} not found in embeddings"

@@ -368,6 +368,39 @@ def l2f_minhash_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_neardup(table(spark, sf_dir, "documents"), threshold=0.5)
 
 
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, tok, n): one row per distinct whitespace token of each
+    doc, with n the doc's distinct-token count."""
+    return docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
+        F.size(F.array_distinct(F.split("text", " "))).alias("n"),
+    )
+
+
+def _shared_token_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, shared, na, nb) for every doc_a < doc_b pair that
+    shares a token: the quadratic token self-join that l2b and
+    containment_pairs score."""
+    toks = _doc_tokens(docs)
+    a = toks.select(
+        F.col("doc_id").alias("doc_a"), F.col("tok"), F.col("n").alias("na")
+    )
+    b = toks.select(
+        F.col("doc_id").alias("doc_b"), F.col("tok"), F.col("n").alias("nb")
+    )
+    return (
+        a.join(b, ["tok"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).alias("shared"),
+            F.first("na").alias("na"),
+            F.first("nb").alias("nb"),
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # L2b: exact unigram token-set Jaccard over all shared-token pairs —
 # the oracle-able quadratic baseline. Note the measure: token sets here
@@ -397,26 +430,8 @@ ORDER BY doc_a, doc_b
 """,
 )
 def l2b_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000).select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-        F.size(F.array_distinct(F.split("text", " "))).alias("n"),
-    )
-    a = toks.select(
-        F.col("doc_id").alias("doc_a"), F.col("tok"), F.col("n").alias("na")
-    )
-    b = toks.select(
-        F.col("doc_id").alias("doc_b"), F.col("tok"), F.col("n").alias("nb")
-    )
-    pairs = (
-        a.join(b, ["tok"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("shared"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
+    pairs = _shared_token_pairs(
+        table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
     )
     jac = F.col("shared").cast("double") / (
         F.col("na") + F.col("nb") - F.col("shared")
@@ -729,15 +744,7 @@ def l2g_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     t = 0.5
-    toks = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 2000)
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-            F.size(F.array_distinct(F.split("text", " "))).alias("n"),
-        )
-    )
+    toks = _doc_tokens(table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000))
     df_counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ranked = toks.join(df_counts, "tok").withColumn(
         "r",
@@ -997,30 +1004,7 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     containment clears ``threshold``; columns (doc_a, doc_b,
     cont_a_in_b, cont_b_in_a, jaccard). Quadratic in shared-token
     pairs — callers bound the corpus or feed LSH candidates."""
-    toks = (
-        docs
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-            F.size(F.array_distinct(F.split("text", " "))).alias("n"),
-        )
-    )
-    a = toks.select(
-        F.col("doc_id").alias("doc_a"), F.col("tok"), F.col("n").alias("na")
-    )
-    b = toks.select(
-        F.col("doc_id").alias("doc_b"), F.col("tok"), F.col("n").alias("nb")
-    )
-    pairs = (
-        a.join(b, ["tok"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("shared"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
-    )
+    pairs = _shared_token_pairs(docs)
     sh = F.col("shared").cast("double")
     cont_a = sh / F.col("na")
     cont_b = sh / F.col("nb")

@@ -324,8 +324,16 @@ def l2d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CELLS = 16
 
 
-def _ivf_assign(emb: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Assign each vector to its max-dot centroid (cell)."""
+def _seed_codebook(emb: DataFrame, k: int = N_CELLS) -> DataFrame:
+    """The deterministic codebook: the k lowest vec_ids are the centroids."""
+    return emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
+    )
+
+
+def _ivf_rank(emb: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(vec_id, embedding, cell_id, aff, rn): every cell ranked per
+    vector by round-6 affinity, ties to the lower cell_id."""
     scored = emb.crossJoin(F.broadcast(codebook)).select(
         "vec_id",
         "embedding",
@@ -333,11 +341,47 @@ def _ivf_assign(emb: DataFrame, codebook: DataFrame) -> DataFrame:
         F.round(dot("embedding", "centroid"), 6).alias("aff"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("aff").desc(), "cell_id")
+    return scored.withColumn("rn", F.row_number().over(w))
+
+
+def _ivf_assign(emb: DataFrame, codebook: DataFrame) -> DataFrame:
+    """Assign each vector to its max-dot centroid (cell)."""
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        _ivf_rank(emb, codebook)
         .filter(F.col("rn") == 1)
         .select("vec_id", "embedding", "cell_id")
     )
+
+
+def _probe_top3(probes: DataFrame, cands: DataFrame) -> DataFrame:
+    """Top-3 same-cell neighbours per probe: probes (query_id, q_emb,
+    q_cell) broadcast against cands (neighbor_id, embedding, cell_id)."""
+    scored = cands.join(
+        F.broadcast(probes), F.col("cell_id") == F.col("q_cell")
+    ).select(
+        "query_id", "neighbor_id", F.round(dot("q_emb", "embedding"), 6).alias("cos")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("long"))
+        .filter(F.col("rn") <= 3)
+        .select("query_id", "neighbor_id", "rn", "cos")
+        .orderBy("query_id", "rn")
+    )
+
+
+def _ivf_search(assigned: DataFrame) -> DataFrame:
+    """Single-probe IVF search: vec_id < 5 query their own cell's
+    vec_id >= 5 members."""
+    probes = assigned.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("cell_id").alias("q_cell"),
+    )
+    cands = assigned.filter(F.col("vec_id") >= 5).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding", "cell_id"
+    )
+    return _probe_top3(probes, cands)
 
 
 @register(
@@ -373,30 +417,7 @@ ORDER BY query_id, rn
 )
 def l3e_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
-    assigned = pin("l3e.ivf_assigned", _ivf_assign(emb, codebook))
-    probes = assigned.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cell_id").alias("q_cell"),
-    )
-    cands = assigned.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("neighbor_id"), "embedding", "cell_id"
-    )
-    scored = cands.join(
-        F.broadcast(probes), F.col("cell_id") == F.col("q_cell")
-    ).select(
-        "query_id", "neighbor_id", F.round(dot("q_emb", "embedding"), 6).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "rn", "cos")
-        .orderBy("query_id", "rn")
-    )
+    return _ivf_search(pin("l3e.ivf_assigned", _ivf_assign(emb, _seed_codebook(emb))))
 
 
 # ---------------------------------------------------------------------------
@@ -451,19 +472,14 @@ def lloyd_iterates(
     """THE Lloyd's loop — deterministic lowest-vec_id seed, then
     ``iters`` assign+update rounds, localCheckpoint() truncating lineage
     each round. Returns {i: codebook-after-update-i} for i in ``keep``
-    (default: just the final iterate). Single source of truth (ADVICE
-    r11): train_codebook (the ann_ivf_trained_search surface) and the
-    certified l3f contract both call this, so the codebook the
-    certificates certify is BY CONSTRUCTION the codebook searched."""
+    (default: just the final iterate). train_codebook (the
+    ann_ivf_trained_search surface) and the certified l3f contract both
+    call this, so the codebook certified is the codebook searched."""
     keep = set(keep) if keep else {iters}
-    codebook = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
+    codebook = _seed_codebook(emb, k)
     out: dict[int, DataFrame] = {}
     if 0 in keep:
-        # iterate 0 = the seed itself; train_codebook(iters=0) returned
-        # the seed under the pre-refactor loop and must keep doing so
-        # (engine.train_ivf_codebook accepts arbitrary iters).
+        # iterate 0 = the seed: engine.train_ivf_codebook accepts iters=0.
         out[0] = codebook
     for i in range(1, iters + 1):
         assigned = _ivf_assign(emb, codebook)
@@ -498,29 +514,7 @@ def ann_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified contract over the training invariants instead."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     codebook = train_codebook(emb, k=N_CELLS, iters=3)
-    assigned = pin("l3f.ivf_assigned", _ivf_assign(emb, codebook))
-    probes = assigned.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cell_id").alias("q_cell"),
-    )
-    cands = assigned.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("neighbor_id"), "embedding", "cell_id"
-    )
-    scored = cands.join(
-        F.broadcast(probes), F.col("cell_id") == F.col("q_cell")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(dot("q_emb", "embedding"), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "rn", "cos")
-        .orderBy("query_id", "rn")
-    )
+    return _ivf_search(pin("l3f.ivf_assigned", _ivf_assign(emb, codebook)))
 
 
 _L3F_ORACLE = f"""
@@ -533,13 +527,13 @@ ORDER BY vec_id
 """
 
 
-# Certified contract (r11 — the l32b pattern applied to the trained
-# tier): Lloyd's iterates are float means whose partial-aggregation
-# order is engine-specific, so cell membership under a TRAINED codebook
-# cannot be hash-matched — but spherical k-means has provable
-# invariants, all checkable in-engine, and the per-vector input norm is
-# oracle-exact. The registered query emits round(<x,x>,6) per vector
-# (DuckDB recomputes it) plus four certificates:
+# Certified contract: Lloyd's iterates are float means whose
+# partial-aggregation order is engine-specific, so cell membership
+# under a TRAINED codebook cannot be hash-matched — but spherical
+# k-means has provable invariants, all checkable in-engine, and the
+# per-vector input norm is oracle-exact. The registered query emits
+# round(<x,x>,6) per vector (DuckDB recomputes it) plus four
+# certificates:
 #   nearest_ok            per row: the assigned cell's affinity equals
 #                         the max affinity over the trained codebook
 #                         (re-derived via an independent groupBy-max,
@@ -559,7 +553,7 @@ ORDER BY vec_id
 # A broken assign step, a diverging update, or a denormalized centroid
 # flips a certificate and hash-fails. The full search surface stays on
 # ``ann_ivf_trained_search``; convergence properties remain in
-# tests/test_vector.py. Was rows-only r4-r10.
+# tests/test_vector.py.
 @register("l3f_ann_ivf_trained", oracle=_L3F_ORACLE)
 def l3f_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -790,21 +784,11 @@ ORDER BY query_id, rn
 )
 def l3i_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
-    scored = emb.crossJoin(F.broadcast(codebook)).select(
-        "vec_id",
-        "embedding",
-        "cell_id",
-        F.round(dot("embedding", "centroid"), 6).alias("aff"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("aff").desc(), "cell_id")
     # ranked feeds BOTH the probes and cands branches below; Catalyst
     # does not reuse the differently-pruned window subtrees, so without
     # the pin the corpus x codebook cross-score + row_number window
     # would execute twice per invocation.
-    ranked = pin("l3i.ranked", scored.withColumn("rn", F.row_number().over(w)))
+    ranked = pin("l3i.ranked", _ivf_rank(emb, _seed_codebook(emb)))
     probes = ranked.filter((F.col("vec_id") < 5) & (F.col("rn") <= 2)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -813,18 +797,7 @@ def l3i_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = ranked.filter((F.col("vec_id") >= 5) & (F.col("rn") == 1)).select(
         F.col("vec_id").alias("neighbor_id"), "embedding", "cell_id"
     )
-    topk = cands.join(
-        F.broadcast(probes), F.col("cell_id") == F.col("q_cell")
-    ).select(
-        "query_id", "neighbor_id", F.round(dot("q_emb", "embedding"), 6).alias("cos")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        topk.withColumn("rn", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "rn", "cos")
-        .orderBy("query_id", "rn")
-    )
+    return _probe_top3(probes, cands)
 
 
 # ---------------------------------------------------------------------------
@@ -1125,10 +1098,7 @@ ORDER BY dup_vec_id
 )
 def l29_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
-    assigned = pin("l29.ivf_assigned", _ivf_assign(emb, codebook))
+    assigned = pin("l29.ivf_assigned", _ivf_assign(emb, _seed_codebook(emb)))
     return _cell_bounded_dedup(assigned)
 
 
@@ -1478,14 +1448,14 @@ def l32b_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cells) leak their mass — standard damped PageRank without dangling
 # redistribution; the invariants tests account for it.
 #
-# Certified contract (r11 — the a2/a17 pattern applied to the iterative
-# tier): the rank VALUES are fixed-point float iterates whose partial-
-# aggregation order is engine-specific, so they cannot appear in a
-# DuckDB oracle — but everything AROUND them can. The registered query
-# emits the oracle-exact graph columns (cell_id from the IVF argmax,
-# out/in-degree from the deterministic round-6 kNN edge list — DuckDB
-# recomputes the entire graph construction and hash-matches it) plus
-# three in-engine mathematical certificates over the iteration:
+# Certified contract: the rank VALUES are fixed-point float iterates
+# whose partial-aggregation order is engine-specific, so they cannot
+# appear in a DuckDB oracle — but everything AROUND them can. The
+# registered query emits the oracle-exact graph columns (cell_id from
+# the IVF argmax, out/in-degree from the deterministic round-6 kNN edge
+# list — DuckDB recomputes the entire graph construction and
+# hash-matches it) plus three in-engine mathematical certificates over
+# the iteration:
 #   floor_ok       per node: rank >= (1-d) exactly (rank is
 #                  (1-d) + d*mass with mass a float sum of nonnegatives,
 #                  and x + nonneg rounds to >= x in IEEE754);
@@ -1498,7 +1468,7 @@ def l32b_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A wrong edge list, a broken iteration, or a diverging estimator flips
 # a column DuckDB checks or a certificate boolean and hash-fails. The
 # full rank surface stays available as ``pagerank_ranks`` (facade +
-# tests/test_pagerank.py invariants). Was rows-only r4-r10.
+# tests/test_pagerank.py invariants); both run ``pagerank_iterates``.
 # ---------------------------------------------------------------------------
 _PR_K = 3
 _PR_DAMP = 0.85
@@ -1529,21 +1499,29 @@ def knn_edges(assigned: DataFrame, k: int = _PR_K) -> DataFrame:
     )
 
 
-def pagerank(
+def pagerank_iterates(
     edges: DataFrame,
     nodes: DataFrame,
-    damping: float = _PR_DAMP,
     iters: int = _PR_ITERS,
-) -> DataFrame:
-    """(vec_id, rank): damped power iteration over (src, dst) edges.
+    keep: set[int] | None = None,
+    damping: float = _PR_DAMP,
+) -> dict[int, DataFrame]:
+    """The damped power iteration over (src, dst) edges from the
+    all-ones vector. Returns {i: (vec_id, rank) after step i} for i in
+    ``keep`` (default: just the final iterate). pagerank and the l35
+    certificates both call this, so the ranks certified are the ranks
+    served.
 
-    Each iteration is one equi-join + one aggregation — edge-list
-    shuffles, no adjacency matrix; ranks/deg stay keyed by node id.
+    Each step is one equi-join + one aggregation — edge-list shuffles,
+    no adjacency matrix; ranks/deg stay keyed by node id.
     """
+    keep = set(keep) if keep else {iters}
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = edges.join(deg, "src").localCheckpoint()
     ranks = nodes.select("vec_id", F.lit(1.0).alias("rank")).localCheckpoint()
-    for _ in range(iters):
+    # iterate 0 = the all-ones start, which pagerank(iters=0) returns.
+    out: dict[int, DataFrame] = {0: ranks} if 0 in keep else {}
+    for i in range(1, iters + 1):
         contrib = (
             ed.join(ranks, ed.src == ranks.vec_id)
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
@@ -1561,7 +1539,19 @@ def pagerank(
             )
             .localCheckpoint()
         )
-    return ranks
+        if i in keep:
+            out[i] = ranks
+    return out
+
+
+def pagerank(
+    edges: DataFrame,
+    nodes: DataFrame,
+    damping: float = _PR_DAMP,
+    iters: int = _PR_ITERS,
+) -> DataFrame:
+    """(vec_id, rank) after ``iters`` damped power-iteration steps."""
+    return pagerank_iterates(edges, nodes, iters, damping=damping)[iters]
 
 
 def pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1571,14 +1561,11 @@ def pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine facade and tests/test_pagerank.py consume this, while
     the registered l35 query carries the certified contract below."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
     # assigned feeds knn_edges (BOTH sides of its self-join), the node
     # universe re-evaluated inside every eager pagerank checkpoint, and
     # the final join — unpinned, the corpus x codebook assignment would
     # recompute ~(iters + 3) times per invocation.
-    assigned = pin("l35.ivf_assigned", _ivf_assign(emb, codebook))
+    assigned = pin("l35.ivf_assigned", _ivf_assign(emb, _seed_codebook(emb)))
     edges = knn_edges(assigned)
     ranks = pagerank(edges, assigned.select("vec_id"))
     w = Window.partitionBy("cell_id").orderBy(F.col("rank").desc(), "vec_id")
@@ -1634,11 +1621,7 @@ ORDER BY a.vec_id
 @register("l35_pagerank_centrality", oracle=_L35_ORACLE)
 def l35_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
-    assigned = pin("l35.ivf_assigned", _ivf_assign(emb, codebook))
-    nodes = assigned.select("vec_id")
+    assigned = pin("l35.ivf_assigned", _ivf_assign(emb, _seed_codebook(emb)))
     # Pin the edge list: it feeds the degree joins, every power-iteration
     # step (via `ed`), and the certificate passes.
     edges = pin("l35.edges", knn_edges(assigned))
@@ -1649,42 +1632,20 @@ def l35_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("in_deg")
     )
 
-    # Power iteration, keeping the iterates the certificates need:
-    # r1 (first step from the all-ones vector), r15 (the result), r16
-    # (one verification step — severable at scale, like a17's
-    # certification join).
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = edges.join(deg, "src").localCheckpoint()
-    ranks = nodes.select("vec_id", F.lit(1.0).alias("rank")).localCheckpoint()
-    iterates: dict[int, DataFrame] = {}
-    for i in range(1, _PR_ITERS + 2):
-        contrib = (
-            ed.join(ranks, ed.src == ranks.vec_id)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("mass"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.vec_id == contrib.dst, "left")
-            .select(
-                "vec_id",
-                (
-                    F.lit(1.0 - _PR_DAMP)
-                    + F.lit(_PR_DAMP) * F.coalesce("mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        if i in (1, _PR_ITERS, _PR_ITERS + 1):
-            iterates[i] = ranks
-
+    # The iterates the certificates need: r1 (first step from the
+    # all-ones vector), r15 (the result pagerank serves) and r16 (one
+    # verification step, severable at scale).
+    last = _PR_ITERS + 1
+    iterates = pagerank_iterates(
+        edges, assigned.select("vec_id"), last, keep={1, _PR_ITERS, last}
+    )
     r15 = iterates[_PR_ITERS]
     # ||r1 - r0||_1 (r0 is all ones) and ||r16 - r15||_1.
     d0 = iterates[1].agg(
         F.sum(F.abs(F.col("rank") - F.lit(1.0))).alias("d0")
     )
     dlast = (
-        iterates[_PR_ITERS + 1]
+        iterates[last]
         .select("vec_id", F.col("rank").alias("r_next"))
         .join(r15, "vec_id")
         .agg(F.sum(F.abs(F.col("r_next") - F.col("rank"))).alias("dlast"))

@@ -591,12 +591,21 @@ def t19_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
+    return anomaly_zscore(b).orderBy("event_type", "win_start_ms")
+
+
+def anomaly_zscore(buckets: DataFrame) -> DataFrame:
+    """(win_start_ms, event_type, n, z) for every bucket with a full
+    8-bucket trailing history of nonzero spread; z = (n - mu) / sigma
+    over that history, rounded to 4 places. t19 serves it over the
+    batch buckets; t20 runs it on its streamed store and on the batch
+    twin, so equals_batch certifies the scorer t19 serves."""
     f = (
         Window.partitionBy("event_type")
         .orderBy("win_start_ms")
         .rowsBetween(-8, -1)
     )
-    s = b.select(
+    scored = buckets.select(
         "win_start_ms",
         "event_type",
         "n",
@@ -604,17 +613,13 @@ def t19_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("n").over(f).alias("mu"),
         F.stddev_samp("n").over(f).alias("sigma"),
     )
-    return (
-        s.filter((F.col("n_prior") == 8) & (F.col("sigma") > 0))
-        .select(
-            "win_start_ms",
-            "event_type",
-            "n",
-            F.round(
-                (F.col("n").cast("double") - F.col("mu")) / F.col("sigma"), 4
-            ).alias("z"),
-        )
-        .orderBy("event_type", "win_start_ms")
+    return scored.filter((F.col("n_prior") == 8) & (F.col("sigma") > 0)).select(
+        "win_start_ms",
+        "event_type",
+        "n",
+        F.round(
+            (F.col("n").cast("double") - F.col("mu")) / F.col("sigma"), 4
+        ).alias("z"),
     )
 
 

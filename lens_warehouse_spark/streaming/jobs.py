@@ -40,6 +40,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from lens_warehouse_spark.catalog import table
 from lens_warehouse_spark.operators._helpers import as_ts, staged_dir
 from lens_warehouse_spark.operators.aggregates import _HH_K as _AGG_HH_K
+from lens_warehouse_spark.operators.timeseries import anomaly_zscore
 from lens_warehouse_spark.registry import register
 
 
@@ -1291,7 +1292,7 @@ def t18_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFram
 # split (incremental windowed state -> tiny analytic over the store) is
 # exactly how a production alerting pipeline is shaped: the stream
 # never recomputes history, and the scorer touches only aggregates.
-# Certified (r11): append mode withholds the trailing open window(s),
+# Certified: append mode withholds the trailing open window(s),
 # and a closed window's 8-predecessor frame contains only closed
 # windows (window ends are monotone in start), so the stream result
 # must equal batch t19 restricted to closed windows EXACTLY —
@@ -1321,32 +1322,6 @@ ORDER BY s.event_type, s.win_start_ms
 """
 
 
-def _t20_score(store: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    f = (
-        Window.partitionBy("event_type")
-        .orderBy("win_start_ms")
-        .rowsBetween(-8, -1)
-    )
-    scored = store.select(
-        "win_start_ms",
-        "event_type",
-        "n",
-        F.count(F.lit(1)).over(f).alias("n_prior"),
-        F.avg("n").over(f).alias("mu"),
-        F.stddev_samp("n").over(f).alias("sigma"),
-    )
-    return scored.filter((F.col("n_prior") == 8) & (F.col("sigma") > 0)).select(
-        "win_start_ms",
-        "event_type",
-        "n",
-        F.round(
-            (F.col("n").cast("double") - F.col("mu")) / F.col("sigma"), 4
-        ).alias("z"),
-    )
-
-
 @register("t20_stream_anomaly_zscore", oracle=_T20_ORACLE)
 def t20_stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
@@ -1360,8 +1335,8 @@ def t20_stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     store = _run_to_table(buckets, "t20")
-    stream_scored = _t20_score(store)
-    batch_scored = _t20_score(_t4_batch_closed(spark, sf_dir))
+    stream_scored = anomaly_zscore(store)
+    batch_scored = anomaly_zscore(_t4_batch_closed(spark, sf_dir))
     return _certify_equals_batch(
         stream_scored, batch_scored, ["win_start_ms", "event_type", "n", "z"]
     ).orderBy("event_type", "win_start_ms")

@@ -1,19 +1,24 @@
 """Invariants for l35 PageRank centrality.
 
-r11: the registered l35 query is now a certified contract (oracle-exact
-graph columns + floor/contraction/mass certificates); the full rank
-surface moved to ``pagerank_ranks`` and keeps its original invariants
-here. The certificate booleans are additionally pinned TRUE at the
-smoke SF so a certificate regression fails fast in-suite, not only at
-driver time.
+The registered l35 query is a certified contract (oracle-exact graph
+columns + floor/contraction/mass certificates); the full rank surface
+is ``pagerank_ranks``, whose invariants are checked here. The
+certificate booleans are additionally pinned TRUE at the smoke SF so a
+certificate regression fails fast in-suite, not only at driver time.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from lens_warehouse_spark.llm.vector import knn_edges, pagerank, pagerank_ranks
+from lens_warehouse_spark.catalog import table
+from lens_warehouse_spark.llm.vector import (
+    _ivf_assign,
+    _seed_codebook,
+    knn_edges,
+    pagerank_iterates,
+    pagerank_ranks,
+)
 from lens_warehouse_spark.registry import QUERIES
 from tests.conftest import SF_SMOKE
 
@@ -56,13 +61,8 @@ def test_certified_contract_booleans_hold(cert):
 def test_certified_degrees_match_edge_list(spark, cert):
     """out_deg/in_deg in the contract must equal the kNN edge list's
     actual degrees (the same numbers the DuckDB oracle recomputes)."""
-    from lens_warehouse_spark.catalog import table
-    from lens_warehouse_spark.llm.vector import N_CELLS, _ivf_assign
-
     emb = table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
+    codebook = _seed_codebook(emb)
     edges = knn_edges(_ivf_assign(emb, codebook)).toPandas()
     out_deg = edges.groupby("src").size()
     in_deg = edges.groupby("dst").size()
@@ -72,8 +72,7 @@ def test_certified_degrees_match_edge_list(spark, cert):
     # out-degree bounded by k=3 (kNN fan-out)...
     assert (cert["out_deg"] <= 3).all()
     # ...and every node sharing its cell with at least one other node
-    # has somewhere to point, so its out-degree is >= 1 (ADVICE r11:
-    # the comment previously claimed this without asserting it).
+    # has somewhere to point, so its out-degree is >= 1.
     assigned = _ivf_assign(emb, codebook).toPandas()
     cell_sizes = assigned.groupby("cell_id").size()
     node_cell = assigned.set_index("vec_id")["cell_id"]
@@ -86,20 +85,16 @@ def test_certified_degrees_match_edge_list(spark, cert):
 
 def test_power_iteration_converges(spark):
     """Successive-iterate delta must shrink (power iteration contracts)."""
-    from lens_warehouse_spark.catalog import table
-    from lens_warehouse_spark.llm.vector import N_CELLS, _ivf_assign
-
     emb = table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
-    codebook = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
+    codebook = _seed_codebook(emb)
     assigned = _ivf_assign(emb, codebook)
     edges = knn_edges(assigned)
     nodes = assigned.select("vec_id")
-    r5 = pagerank(edges, nodes, iters=5).toPandas().set_index("vec_id")["rank"]
-    r6 = pagerank(edges, nodes, iters=6).toPandas().set_index("vec_id")["rank"]
-    r15 = pagerank(edges, nodes, iters=15).toPandas().set_index("vec_id")["rank"]
-    r16 = pagerank(edges, nodes, iters=16).toPandas().set_index("vec_id")["rank"]
+    it = pagerank_iterates(edges, nodes, 16, keep={5, 6, 15, 16})
+    assert set(it) == {5, 6, 15, 16}
+    r5, r6, r15, r16 = (
+        it[i].toPandas().set_index("vec_id")["rank"] for i in (5, 6, 15, 16)
+    )
     early = (r6 - r5).abs().sum()
     late = (r16 - r15).abs().sum()
     # geometric contraction: measured per-iteration factor ~0.62 on this

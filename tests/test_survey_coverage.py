@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
+
 from lens_warehouse_spark import registry
 
 registry.load_all()
@@ -125,3 +127,29 @@ def test_src_hash_ledger_is_fresh():
         f"run tools/update_src_hashes.py — missing={missing} "
         f"changed={stale_hash} dropped={dropped}"
     )
+
+
+@pytest.mark.parametrize("script", ["update_src_hashes.py", "update_ledger.py"])
+def test_ledger_writer_rejects_arguments(script):
+    """An argument such as --help must print usage and exit 2 without
+    touching either ledger (the writers take no arguments, so any
+    argument is a mistake, not a request to rewrite)."""
+    import subprocess
+    import sys
+
+    ledgers = [
+        os.path.join(REPO, "tools", f)
+        for f in ("query_src_hashes.json", "query_ledger.json")
+    ]
+    before = [(open(p, "rb").read(), os.stat(p).st_mtime_ns) for p in ledgers]
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", script), "--help"],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        timeout=300,
+    )
+    assert proc.returncode == 2, proc.stdout + proc.stderr
+    assert "usage" in proc.stderr
+    after = [(open(p, "rb").read(), os.stat(p).st_mtime_ns) for p in ledgers]
+    assert after == before

@@ -10,6 +10,7 @@ from lens_warehouse_spark.catalog import table
 from lens_warehouse_spark.llm.vector import (
     N_CELLS,
     _ivf_assign,
+    _seed_codebook,
     mean_best_affinity,
     train_codebook,
     update_centroids,
@@ -20,9 +21,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_spherical_kmeans_objective_monotone(spark):
     emb = table(spark, SF, "embeddings").select("vec_id", "embedding")
-    cb = emb.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
+    cb = _seed_codebook(emb)
     prev = mean_best_affinity(emb, cb)
     for _ in range(3):
         cb = update_centroids(_ivf_assign(emb, cb)).localCheckpoint()

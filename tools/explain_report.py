@@ -11,7 +11,8 @@ Writes PLANS.md with the formatted plans + assertion results.
 Usage: python tools/explain_report.py [sf_dir] [--diff] [--save]
   --diff  compare normalized plans with tools/plan_baseline.json; exit 1
           on any DRIFT (plan changed) or NEW (no baseline) entry
-  --save  rewrite tools/plan_baseline.json from this run
+  --save  write tools/plan_baseline.json from this run (nothing else
+          writes it, so a missing baseline keeps --diff failing)
 """
 
 from __future__ import annotations
@@ -774,7 +775,7 @@ def main() -> int:
                     print(f"  {line}")
         if not drifted:
             print(f"no plan drift across {len(snapshots)} snapshotted queries")
-    if "--save" in flags or not os.path.exists(baseline_path):
+    if "--save" in flags:
         with open(baseline_path, "w") as f:
             json.dump(snapshots, f, indent=1, sort_keys=True)
         print(f"baseline saved: {baseline_path}")

@@ -9,35 +9,36 @@ rounds past registration without a CORRECTNESS row — the guard the r7
 verdict asked for so coverage debt cannot silently accumulate.
 
 Run after registering new queries: python tools/update_ledger.py
+(no arguments; any argument prints usage and exits 2 without writing)
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 from lens_warehouse_spark import registry  # noqa: E402
-
-registry.load_all()
+from tools.update_src_hashes import latest_round  # noqa: E402
 
 
 def main() -> None:
+    if sys.argv[1:]:
+        print(
+            "usage: python tools/update_ledger.py (takes no arguments)",
+            file=sys.stderr,
+        )
+        raise SystemExit(2)
+    registry.load_all()
     path = os.path.join(HERE, "tools", "query_ledger.json")
     ledger = {}
     if os.path.exists(path):
         with open(path) as fh:
             ledger = json.load(fh)
-    latest = 0
-    for p in glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if m:
-            latest = max(latest, int(m.group(1)))
+    latest = latest_round()
     added = [n for n in registry.QUERIES if n not in ledger]
     for n in added:
         ledger[n] = latest + 1

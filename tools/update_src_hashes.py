@@ -13,6 +13,8 @@ oldest-driver-row-first rotation reaches the name.
 
 Run after editing any registered query: python tools/update_src_hashes.py
 (test_survey_coverage.py fails if the committed ledger is out of date.)
+It takes no arguments; any argument prints usage and exits 2 without
+writing.
 """
 
 from __future__ import annotations
@@ -53,6 +55,12 @@ def latest_round() -> int:
 
 
 def main() -> None:
+    if sys.argv[1:]:
+        print(
+            "usage: python tools/update_src_hashes.py (takes no arguments)",
+            file=sys.stderr,
+        )
+        raise SystemExit(2)
     registry.load_all()
     ledger: dict[str, dict] = {}
     if os.path.exists(PATH):

@@ -31,8 +31,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 from lens_warehouse_spark import registry
 from lens_warehouse_spark.catalog import TABLES
 from tools.check_parity import duck_connection
@@ -138,18 +136,14 @@ def content_fingerprint(sf_dir: str) -> str:
     SENSITIVE (bit_xor was not: rows duplicated an even number of times
     cancel out, so a double-write staging bug would fingerprint clean).
     Two sessions reporting the same fingerprint measured the SAME
-    bytes; a ratio spread between them is machine state, not data (the
-    round-4 0.38x-vs-0.72x question)."""
-    con = duckdb.connect()
+    bytes; a ratio spread between them is machine state, not data."""
+    con = duck_connection(sf_dir)
     parts = []
     for t in ("documents", "events"):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        src = f"{path}/*.parquet" if os.path.isdir(path) else path
         row = con.execute(
             "SELECT count(*) AS n, "
             "to_hex(CAST(sum(hash(t::VARCHAR)::HUGEINT) % 18446744073709551616 "
-            "AS UBIGINT)) AS h "
-            f"FROM read_parquet('{src}') t"
+            f"AS UBIGINT)) AS h FROM {t} t"
         ).fetchone()
         parts.append(f"{t}:n={row[0]}:h={row[1]}")
     con.close()
