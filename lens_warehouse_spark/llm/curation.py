@@ -831,10 +831,10 @@ def l26_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the standard "best N billion tokens" cut). Quality = distinct-token
 # ratio (l6's repetition signal); ordering uses the UNROUNDED ratio
 # (IEEE division is bit-identical across engines; rounding only the
-# output column keeps the oracle hash stable). The cumulative sum is
-# computed scale-correctly like l26: range-repartition on the sort key,
-# per-partition running totals, then add broadcast per-partition token
-# offsets — no single-partition window over the corpus. At 100 TB the
+# output column keeps the oracle hash stable). The cumulative sum comes
+# from ``running_totals`` (range-repartition on the sort key, local
+# running sums, broadcast per-partition token offsets) — no
+# single-partition window over the corpus. At 100 TB the
 # cheaper first cut is a quality-histogram quantile (tiny aggregate)
 # that prunes to ~budget before the exact pass; this operator is the
 # exact pass. NS training-pipeline extension.
@@ -863,7 +863,7 @@ ORDER BY doc_id
 """,
 )
 def l27_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+    from lens_warehouse_spark.operators._helpers import running_totals
 
     toks = F.split(F.col("text"), " ")
     scored = table(spark, sf_dir, "documents").select(
@@ -873,32 +873,11 @@ def l27_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
         ).alias("q"),
     )
-    ranked = (
-        scored.repartitionByRange(32, F.col("q").desc(), F.col("doc_id"))
-        .withColumn("__p", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    w_local = (
-        Window.partitionBy("__p")
-        .orderBy(F.col("q").desc(), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    with_local = ranked.withColumn("__cum", F.sum("n_tok").over(w_local))
-    # Per-partition token offsets via a triangular self-join over the
-    # P-row totals (P = range partition count, bounded by construction)
-    # — no unpartitioned window anywhere in the plan (same shape as
-    # _helpers.global_rank's offsets).
-    totals = ranked.groupBy("__p").agg(F.sum("n_tok").alias("__t"))
-    prior = totals.select(F.col("__p").alias("__p2"), F.col("__t").alias("__t2"))
-    offsets = (
-        totals.join(F.broadcast(prior), F.col("__p2") < F.col("__p"), "left")
-        .groupBy("__p")
-        .agg(F.coalesce(F.sum("__t2"), F.lit(0)).alias("__off"))
+    cum, _ = running_totals(
+        scored, [F.col("q").desc(), F.col("doc_id")], {"cum_tok": "n_tok"}
     )
     return (
-        with_local.join(F.broadcast(offsets), "__p")
-        .withColumn("cum_tok", (F.col("__off") + F.col("__cum")).cast("long"))
-        .filter(F.col("cum_tok") <= _L27_BUDGET)
+        cum.filter(F.col("cum_tok") <= _L27_BUDGET)
         .select(
             "doc_id",
             F.col("n_tok").cast("long").alias("n_tok"),

@@ -6,66 +6,92 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def global_rank(
+def running_totals(
     df: DataFrame,
     order_cols: list[Column | str],
-    rank_col: str = "__rank",
+    sums: dict[str, Column | str],
     num_partitions: int = 32,
-) -> DataFrame:
-    """Global 1-based dense row_number over ``order_cols`` WITHOUT the
-    single-partition window a plain ``Window.orderBy`` degenerates to
-    ("Moving all data to a single partition").
+) -> tuple[DataFrame, DataFrame]:
+    """Global running sums over ``order_cols`` WITHOUT the single-partition
+    window a plain ``Window.orderBy`` degenerates to ("Moving all data to
+    a single partition").
+
+    ``sums`` maps each output name to the column it accumulates. Returns
+    ``(running, totals)``: ``running`` carries the input columns plus, per
+    output, the sum over every row up to and including this one, and
+    ``totals`` is one row of the grand sums under the same names (NULL
+    on an empty input). ``order_cols`` must be a total order (include a
+    unique tiebreaker), or tied rows' sums depend on placement.
 
     The scale-correct formulation (same as a global sort's machinery):
-    range-repartition on the order key (parallel range shuffle), rank
-    locally per partition, then add broadcast per-partition row-count
-    offsets. offsets + local == global regardless of where the sampled
-    range boundaries fall. ``localCheckpoint`` pins the ranged relation
-    so the offsets pass reads cached blocks instead of repeating the
-    range shuffle (range exchanges sample boundaries, so Catalyst
-    cannot reuse them across branches).
-
-    ``order_cols`` must be a total order (include a unique tiebreaker);
-    the result carries the input columns plus ``rank_col`` (long).
+    range-repartition on the order key (parallel range shuffle), sum
+    locally per partition, then add broadcast per-partition offsets.
+    offsets + local == global regardless of where the sampled range
+    boundaries fall. ``localCheckpoint`` pins the ranged relation so the
+    offsets and totals read cached blocks instead of repeating the range
+    shuffle (range exchanges sample boundaries, so Catalyst cannot reuse
+    them across branches). Working columns: ``__p``, ``__r``, ``__off``.
     """
     from pyspark.sql import Window
-
-    if rank_col in ("__p", "__r", "__off") or rank_col in df.columns:
-        # A caller-supplied name colliding with the internal working
-        # columns (or an existing input column) would be silently
-        # dropped by the final .drop(), breaking the documented
-        # contract that the result carries rank_col.
-        raise ValueError(
-            f"global_rank: rank_col {rank_col!r} collides with an internal "
-            "working column or an input column"
-        )
 
     keyed = (
         df.repartitionByRange(num_partitions, *order_cols)
         .withColumn("__p", F.spark_partition_id())
         .localCheckpoint()
     )
-    w_local = Window.partitionBy("__p").orderBy(*order_cols)
-    ranked = keyed.withColumn("__r", F.row_number().over(w_local))
-    # Offset of partition p = rows in partitions before p. Computed as a
-    # triangular self-join over the per-partition counts — a relation
-    # with exactly ``num_partitions`` rows, bounded by construction and
-    # never data-sized — so no window (and no single-partition exchange)
-    # appears anywhere in this plan.
-    counts = keyed.groupBy("__p").agg(F.count(F.lit(1)).alias("__n"))
-    prior = counts.select(
-        F.col("__p").alias("__p2"), F.col("__n").alias("__n2")
+    w_local = (
+        Window.partitionBy("__p")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    local = keyed.withColumn(
+        "__r", F.struct(*[F.sum(c).over(w_local).alias(n) for n, c in sums.items()])
+    )
+    # Offset of partition p = sums of the partitions before p. Computed as
+    # a triangular self-join over the per-partition sums — a relation with
+    # exactly ``num_partitions`` rows, bounded by construction and never
+    # data-sized — so no window (and no single-partition exchange) appears
+    # anywhere in this plan.
+    parts = keyed.groupBy("__p").agg(*[F.sum(c).alias(n) for n, c in sums.items()])
+    prior = parts.select(F.col("__p").alias("__p2"), F.struct(*sums).alias("__r"))
     offsets = (
-        counts.join(F.broadcast(prior), F.col("__p2") < F.col("__p"), "left")
+        parts.select("__p")
+        .join(F.broadcast(prior), F.col("__p2") < F.col("__p"), "left")
         .groupBy("__p")
-        .agg(F.coalesce(F.sum("__n2"), F.lit(0)).alias("__off"))
+        .agg(
+            F.struct(
+                *[F.coalesce(F.sum(f"__r.{n}"), F.lit(0)).alias(n) for n in sums]
+            ).alias("__off")
+        )
     )
-    return (
-        ranked.join(F.broadcast(offsets), "__p")
-        .withColumn(rank_col, (F.col("__off") + F.col("__r")).cast("long"))
-        .drop("__p", "__r", "__off")
+    running = local.join(F.broadcast(offsets), "__p").select(
+        *df.columns, *[(F.col(f"__off.{n}") + F.col(f"__r.{n}")).alias(n) for n in sums]
     )
+    return running, parts.agg(*[F.sum(n).alias(n) for n in sums])
+
+
+def global_rank(
+    df: DataFrame,
+    order_cols: list[Column | str],
+    rank_col: str = "__rank",
+    num_partitions: int = 32,
+) -> DataFrame:
+    """Global 1-based dense row_number over ``order_cols``: the running
+    count of :func:`running_totals`, so no single-partition window.
+
+    ``order_cols`` must be a total order (include a unique tiebreaker);
+    the result carries the input columns plus ``rank_col`` (long).
+    """
+    if rank_col in ("__p", "__r", "__off") or rank_col in df.columns:
+        # A caller-supplied name colliding with the internal working
+        # columns (or an existing input column) would be silently
+        # dropped or shadowed, breaking the documented contract that
+        # the result carries rank_col.
+        raise ValueError(
+            f"global_rank: rank_col {rank_col!r} collides with an internal "
+            "working column or an input column"
+        )
+    return running_totals(df, order_cols, {rank_col: F.lit(1)}, num_partitions)[0]
 
 
 _PINNED: dict[str, DataFrame] = {}

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lens_warehouse_spark.catalog import table
+from lens_warehouse_spark.operators._helpers import running_totals
 from lens_warehouse_spark.registry import register
 
 
@@ -878,18 +879,90 @@ def a18_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A20: EXACT median without a global sort — the scale-correct exact
-# selection: (1) a percentile_approx sketch pass brackets the median
-# (GK error bound guarantees the true median lies inside a generous
-# bracket), (2) one count pass fixes the rank of the bracket's left
-# edge, (3) the in-bracket slice (a tiny, error-bounded fraction of
-# the data) is ranked DISTRIBUTED via global_rank (range-repartition +
-# per-partition offsets — no single-partition window, no driver
-# collect), and only the two middle ranks survive the final filter.
-# Nothing data-sized ever leaves the cluster: the driver sees two
-# sketch scalars and two counts. Contrast with a5b/a17 which settle
-# for the approximation itself. Median definition matches SQL
-# quantile_cont(0.5): average of the two middle values for even n.
+# Exact quantiles without sorting any group (A20-A22, A24): the
+# bracket-then-select kernel. One percentile_approx aggregate per group
+# brackets every p, one below-bracket count per (group, p) fixes the
+# bracket's rank offset, and one window partitioned by (keys, p_idx)
+# ranks only the in-bracket slice. Nothing data-sized is sorted or
+# reaches the driver, and building the plan runs no job.
+# ---------------------------------------------------------------------------
+# GK rank error is n / accuracy = 1e-5·n, inside every caller's margin·n.
+_GK_ACCURACY = 100_000
+
+
+def exact_quantiles(
+    df: DataFrame, value: str, ps: tuple, keys: tuple = (), margin: float = 0.03
+) -> DataFrame:
+    """Exact ``quantile_cont(value, p)`` for every p in ``ps`` per
+    ``keys`` group: rows ``(*keys, p_idx, q, n)``, q rounded to 4 (NULL
+    when the group has no non-null value) and n the group's row count.
+
+    Each p is bracketed at [p - margin, p + margin]; the slice inside
+    holds both order statistics straddling h = (m-1)p + 1 of the m
+    non-null values whenever margin·m >= 2, and a smaller group takes
+    itself whole as its bracket. Equal values share one row with their
+    count, so heavy ties shrink the ranked slice instead of breaking
+    the rank math.
+    """
+    from pyspark.sql import Window
+
+    keys, ps, v = list(keys), tuple(ps), F.col(value)
+    probes = [max(p - margin, 0.0) for p in ps] + [min(p + margin, 1.0) for p in ps]
+    stats = df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(v).alias("__m"),
+        F.percentile_approx(v, probes, _GK_ACCURACY).alias("__b"),
+    )
+    tiny = F.col("__m") * margin < 2
+    p_rows = F.posexplode(F.array(*map(F.lit, ps))).alias("p_idx", "p")
+    brackets = stats.select(*keys, "n", "__m", "__b", p_rows).select(
+        *keys,
+        "p_idx",
+        "n",
+        ((F.col("__m") - 1) * F.col("p") + 1).alias("__h"),
+        F.when(tiny, float("-inf"))
+        .otherwise(F.element_at("__b", F.col("p_idx") + 1))
+        .alias("__lo"),
+        F.when(tiny, float("inf"))
+        .otherwise(F.element_at("__b", F.col("p_idx") + 1 + len(ps)))
+        .alias("__hi"),
+    )
+    cols = [*keys, "p_idx", "n", "__h"]
+    # Values below the bracket (and uncounted NULLs) fold into one NULL
+    # row per (group, p) whose count is the bracket's rank offset; it
+    # sorts first in the window, and alone picks q NULL for a group of NULLs.
+    counts = (
+        df.join(F.broadcast(brackets), keys or None)  # no keys: every row meets every p
+        .filter(v.isNull() | (v <= F.col("__hi")))
+        .groupBy(*cols, F.when(v >= F.col("__lo"), v).alias("__v"))
+        .agg(F.count(v).alias("__c"))
+    )
+    w = (
+        Window.partitionBy(*keys, "p_idx")
+        .orderBy(F.col("__v").asc_nulls_first())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # A row covers ranks (__top - __c, __top]; keep those meeting
+    # floor(h) or ceil(h), whose values interpolate to the quantile.
+    h, top = F.col("__h"), F.col("__top")
+    picked = counts.withColumn("__top", F.sum("__c").over(w)).filter(
+        (top - F.col("__c") < F.ceil(h)) & (top >= F.floor(h))
+    )
+    frac = h - F.floor(h)
+    return picked.groupBy(*cols).agg(
+        F.min("__v").alias("__vlo"), F.max("__v").alias("__vhi")
+    ).select(
+        *keys,
+        "p_idx",
+        F.round(F.col("__vlo") * (1 - frac) + F.col("__vhi") * frac, 4).alias("q"),
+        F.col("n").cast("long").alias("n"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# A20: EXACT median of c_acctbal without a global sort (contrast a5b/a17,
+# which settle for the sketch itself). The ±0.001 bracket slice is ~0.2%
+# of customer and ranks in one task.
 # ---------------------------------------------------------------------------
 @register(
     "a20_exact_median",
@@ -901,76 +974,18 @@ FROM customer
 )
 def a20_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = table(spark, sf_dir, "customer").select("c_acctbal")
-    # Pass 1: bracket the median with an accuracy-bounded sketch. GK
-    # rank error is n/accuracy = 1e-5·n, far inside the ±0.001 quantile
-    # margin, so the true middle ranks are guaranteed in-bracket and the
-    # ranked slice is ~0.2% of rows — and it stays on executors.
-    lo, hi = cu.agg(
-        F.percentile_approx("c_acctbal", 0.499, 100_000).alias("lo"),
-        F.percentile_approx("c_acctbal", 0.501, 100_000).alias("hi"),
-    ).first()
-    # Pass 2: exact rank of the bracket edge + total count.
-    n_total, n_below = cu.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("c_acctbal") < lo, 1).otherwise(0)).alias("b"),
-    ).first()
-    if not n_total:
-        # Empty table (r13 relational campaign, empty-dim corpus):
-        # n_below is NULL and int(None) below would crash. SQL
-        # quantile_cont over zero rows is NULL with count 0 — one row.
-        return spark.range(1).select(
-            F.lit(None).cast("double").alias("median_balance"),
-            F.lit(0).cast("long").alias("n"),
-        )
-    # The two middle ranks (1-based): for odd n both are (n+1)/2.
-    k1, k2 = (n_total + 1) // 2, n_total // 2 + 1
-    # Pass 3: rank the bracketed slice IN the cluster. Ties in
-    # c_acctbal make the tiebreak order arbitrary, but the value at any
-    # fixed rank is invariant under it, so no tiebreaker column needed.
-    from ._helpers import global_rank
-
-    sliced = cu.filter(
-        (F.col("c_acctbal") >= lo) & (F.col("c_acctbal") <= hi)
-    )
-    # rank_col must NOT be "__r" — that collides with global_rank's
-    # internal column and the helper would drop the rank entirely
-    # (global_rank now rejects the collision outright).
-    picked = global_rank(sliced, ["c_acctbal"], rank_col="__gr").filter(
-        (F.col("__gr") + F.lit(int(n_below))).isin(int(k1), int(k2))
-    )
-    return picked.agg(
-        F.round(F.avg("c_acctbal"), 4).alias("median_balance")
-    ).select(
-        "median_balance", F.lit(int(n_total)).cast("long").alias("n")
-    )
-
-
-def _widen_tiny_group_brackets(stats: DataFrame, margin: float) -> DataFrame:
-    """Disable the GK bracket for groups too small to guarantee BOTH
-    straddling ranks in-bracket (needs margin * n >= 2): set lo/hi to
-    -inf/+inf so the slice becomes the whole (tiny) group and the
-    below-count is consistently zero. Caught by direct construction: a
-    2-row group's p90 bracket [v2, v2] excludes rank 1, silently
-    returning v2 instead of the interpolated quantile. Zero cost for
-    real groups (n >= 2/margin + 1)."""
-    n_min = int(2.0 / margin) + 2
-    tiny = F.col("n") < n_min
-    return stats.withColumn(
-        "lo", F.when(tiny, F.lit(float("-inf"))).otherwise(F.col("lo"))
-    ).withColumn(
-        "hi", F.when(tiny, F.lit(float("inf"))).otherwise(F.col("hi"))
+    # The global aggregate keeps quantile_cont's one (NULL, 0) row on an
+    # empty table, where the kernel has no group to report.
+    return exact_quantiles(cu, "c_acctbal", (0.5,), margin=0.001).agg(
+        F.max("q").alias("median_balance"),
+        F.coalesce(F.max("n"), F.lit(0)).alias("n"),
     )
 
 
 # ---------------------------------------------------------------------------
-# A21: per-GROUP exact median without sorting any group — a20's
-# bracket-then-select composed with groupBy: one sketch pass brackets
-# every group's median simultaneously, one count pass fixes each
-# group's below-bracket rank, and the per-group selection runs as a
-# window over ONLY the in-bracket slices (error-bounded tiny), never
-# the groups themselves. The slice window is partitioned by group, so
-# no single-partition degeneracy; shuffle = slices + two small
-# broadcast joins. quantile_cont semantics per group.
+# A21/A22: per-group exact median and p90 of events.value by event_type.
+# The selection window is partitioned by (event_type, p_idx), so each
+# group's slice ranks in its own task.
 # ---------------------------------------------------------------------------
 @register(
     "a21_grouped_exact_median",
@@ -984,24 +999,14 @@ ORDER BY event_type
 """,
 )
 def a21_grouped_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The median IS the p=0.5 percentile: h = (n-1)/2 + 1 straddles the
-    # two middle ranks for even n (frac = 0.5 averages them) and the
-    # single middle rank for odd n — one shared implementation instead
-    # of two hand-synced copies of the rank bookkeeping.
     ev = table(spark, sf_dir, "events").select("event_type", "value")
-    return _grouped_exact_percentile(ev, 0.5, "median_value")
+    return (
+        exact_quantiles(ev, "value", (0.5,), keys=("event_type",))
+        .select("event_type", F.col("q").alias("median_value"), "n")
+        .orderBy("event_type")
+    )
 
 
-# ---------------------------------------------------------------------------
-# A22: per-group exact ARBITRARY percentile — a21's bracket-then-select
-# generalized from the median to any p (here p90 per event_type). The
-# sketch pass brackets [p-margin, p+margin] per group; the count pass
-# fixes each group's below-bracket rank; selection windows run over
-# ONLY the in-bracket slices. quantile_cont(p) semantics: linear
-# interpolation between the two straddling order statistics at virtual
-# index h = (n-1)*p + 1 (1-based), which the filter picks via
-# floor(h)/ceil(h) and the final select interpolates exactly.
-# ---------------------------------------------------------------------------
 _A22_P = 0.9
 
 
@@ -1018,65 +1023,9 @@ ORDER BY event_type
 )
 def a22_grouped_exact_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select("event_type", "value")
-    return _grouped_exact_percentile(ev, _A22_P, "p90_value")
-
-
-def _grouped_exact_percentile(
-    ev: DataFrame, p: float, out_name: str, margin: float = 0.03
-) -> DataFrame:
-    """Per-group exact quantile_cont(p) over (event_type, value) via the
-    bracket-then-select machinery: GK-sketch brackets [p±margin] per
-    group, one conditional-agg pass fixes each group's below-bracket
-    rank, then the selection window runs over ONLY the in-bracket
-    slices and interpolates the straddling order statistics at virtual
-    index h = (n-1)*p + 1. Shared by a21 (p=0.5) and a22 (p=0.9) so the
-    subtle rank bookkeeping (incl. the tiny-group bracket widening)
-    lives exactly once."""
-    from pyspark.sql import Window
-
-    stats = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.percentile_approx("value", max(p - margin, 0.0), 50_000).alias("lo"),
-        F.percentile_approx("value", min(p + margin, 1.0), 50_000).alias("hi"),
-    )
-    stats = _widen_tiny_group_brackets(stats, margin=margin)
-    below = (
-        ev.join(F.broadcast(stats.select("event_type", "lo")), "event_type")
-        .filter(F.col("value") < F.col("lo"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_below"))
-    )
-    sliced = ev.join(F.broadcast(stats), "event_type").filter(
-        (F.col("value") >= F.col("lo")) & (F.col("value") <= F.col("hi"))
-    )
-    w = Window.partitionBy("event_type").orderBy("value")
-    # virtual index h (1-based) and its straddling integer ranks
-    h = (F.col("n") - 1) * F.lit(p) + 1
-    k_lo, k_hi = F.floor(h), F.ceil(h)
-    frac = h - k_lo
-    ranked = (
-        sliced.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(below), "event_type", "left")
-        .withColumn(
-            "rank", F.col("rn") + F.coalesce(F.col("n_below"), F.lit(0))
-        )
-    )
-    picked = ranked.filter((F.col("rank") == k_lo) | (F.col("rank") == k_hi))
-    # interpolate: v_lo*(1-frac) + v_hi*frac; when k_lo == k_hi the
-    # single row carries both roles
     return (
-        picked.groupBy("event_type", "n")
-        .agg(
-            F.min("value").alias("v_lo"),
-            F.max("value").alias("v_hi"),
-        )
-        .select(
-            "event_type",
-            F.round(
-                F.col("v_lo") * (F.lit(1) - frac) + F.col("v_hi") * frac, 4
-            ).alias(out_name),
-            F.col("n").cast("long").alias("n"),
-        )
+        exact_quantiles(ev, "value", (_A22_P,), keys=("event_type",))
+        .select("event_type", F.col("q").alias("p90_value"), "n")
         .orderBy("event_type")
     )
 
@@ -1132,23 +1081,11 @@ def a23_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # A24: exact equi-depth histogram — the optimizer-statistics / feature-
-# binning primitive: exact deciles of o_totalprice (quantile_cont
-# semantics) computed with the bracket-then-select machinery, then one
-# aggregation binning every row by how many boundaries it exceeds.
-#
-# Scale shape: FOUR passes over the fact column, all partial-aggregated
-# — (1) one GK sketch call brackets ALL nine deciles at once (18 probe
-# points, rank error 1e-5*n << the ±0.005 bracket margin, so brackets
-# are disjoint and each true decile is guaranteed in-bracket), (2) one
-# conditional-sum pass fixes each bracket's below-rank, (3) the union
-# of the nine tiny slices ranks in a window PARTITIONED by decile
-# index (never the full table, no single-partition window), and the
-# straddling order statistics interpolate exactly like a22, (4) the
-# binning pass compares each row against nine rounded literals inside
-# codegen. Only 9 boundary doubles and 10 counts ever reach the
-# driver. Boundary parity: identical interpolation expression to a22
-# (proven against quantile_cont), rounded to 4 before binning on BOTH
-# engines so bin edges are exact decimals.
+# binning primitive: exact deciles of o_totalprice (quantile_cont,
+# rounded to 4 on both engines so bin edges are exact decimals), then
+# one aggregation binning every order by how many deciles it exceeds.
+# The nine deciles ride to every task as one broadcast row; each ±0.005
+# bracket slice is 1% of orders and ranks in its own window partition.
 # ---------------------------------------------------------------------------
 _A24_PS = tuple(round(0.1 * i, 1) for i in range(1, 10))
 _A24_MARGIN = 0.005
@@ -1172,115 +1109,16 @@ ORDER BY 1
 )
 def a24_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = table(spark, sf_dir, "orders").select("o_totalprice")
-    try:
-        bounds = exact_quantile_boundaries(od, "o_totalprice", _A24_PS, _A24_MARGIN)
-    except ValueError:
-        # Empty table (r13 relational campaign): no deciles exist and
-        # the oracle's cross-join-with-quantiles form yields zero
-        # groups — return the empty relation with the result schema.
-        return spark.createDataFrame([], "bin long, n_rows long")
-    # Pass 4: bin by boundary-exceedance count, entirely in codegen.
-    bin_expr = sum(
-        (F.col("o_totalprice") > F.lit(b)).cast("long") for b in bounds
+    qs = exact_quantiles(od, "o_totalprice", _A24_PS, margin=_A24_MARGIN).agg(
+        F.collect_list("q").alias("qs")
     )
+    bin_expr = F.size(F.filter("qs", lambda b: F.col("o_totalprice") > b))
     return (
-        od.groupBy(bin_expr.alias("bin"))
+        od.crossJoin(F.broadcast(qs))
+        .groupBy(bin_expr.cast("long").alias("bin"))
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .orderBy("bin")
     )
-
-
-def exact_quantile_boundaries(
-    df: DataFrame,
-    col: str,
-    ps: tuple = _A24_PS,
-    margin: float = _A24_MARGIN,
-    accuracy: int = 100_000,
-) -> list[float]:
-    """Exact quantile_cont(p) for every p, rounded to 4 — bracket with
-    one GK sketch call, rank the disjoint slices in a per-p window,
-    interpolate the straddling order statistics (a20/a22 machinery).
-    Returns O(|ps|) floats; nothing data-sized reaches the driver."""
-    from pyspark.sql import Window
-
-    m = margin
-    od = df.select(F.col(col).alias("o_totalprice"))
-    ps = tuple(ps)
-
-    # Pass 1: bracket all quantiles with one sketch call; n rides along
-    # in the SAME aggregation (a dedicated od.count() pre-pass was a
-    # full extra scan per invocation that made the a24 header's "four
-    # passes" a lie). The bracket must contain BOTH straddling ranks
-    # floor/ceil((n-1)p+1), which needs margin*n >= 2: at scale the
-    # plain margin satisfies that; only a tiny input (n < 2/margin)
-    # re-brackets once with a widened margin (caught by the hypothesis
-    # test at n=2).
-    def sketch(mm: float):
-        probes = [max(p - mm, 0.0) for p in ps] + [min(p + mm, 1.0) for p in ps]
-        return od.agg(
-            F.percentile_approx("o_totalprice", probes, accuracy).alias("b"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-
-    row = sketch(m)
-    n = row["n"]
-    if n == 0:
-        # percentile_approx over zero rows yields NULL — fail with a
-        # clear contract instead of a NoneType subscript below.
-        raise ValueError("exact_quantile_boundaries: empty input")
-    if m * n < 2:
-        row = sketch(m + 2.0 / n)
-    lows, highs = row["b"][: len(ps)], row["b"][len(ps):]
-    # Pass 2: exact below-bracket rank per decile (one conditional agg).
-    below_row = od.agg(
-        *[
-            F.sum(F.when(F.col("o_totalprice") < lows[i], 1).otherwise(0)).alias(
-                f"b{i}"
-            )
-            for i in range(len(ps))
-        ]
-    ).first()
-    below = [int(below_row[f"b{i}"]) for i in range(len(ps))]
-    # Pass 3: rank the union of the (disjoint) slices, partitioned by
-    # decile index; pick and interpolate the straddling statistics.
-    # Membership via a 9-row broadcast range join, NOT a first-match
-    # CASE tag: under heavy ties the brackets can OVERLAP on a repeated
-    # value, and every p must still see its full slice (caught by the
-    # hypothesis test on tied data). Join output = sum of slice sizes.
-    spark = df.sparkSession
-    brackets = spark.createDataFrame(
-        [(i, float(lows[i]), float(highs[i])) for i in range(len(ps))],
-        "p_idx int, lo double, hi double",
-    )
-    sliced = od.join(
-        F.broadcast(brackets),
-        (F.col("o_totalprice") >= F.col("lo"))
-        & (F.col("o_totalprice") <= F.col("hi")),
-    )
-    w = Window.partitionBy("p_idx").orderBy("o_totalprice")
-    below_map = F.element_at(
-        F.array(*[F.lit(b) for b in below]), F.col("p_idx") + 1
-    )
-    p_arr = F.array(*[F.lit(float(p)) for p in ps])
-    h = (F.lit(n) - 1) * F.element_at(p_arr, F.col("p_idx") + 1) + 1
-    k_lo, k_hi = F.floor(h), F.ceil(h)
-    frac = h - k_lo
-    picked = (
-        sliced.withColumn("rank", F.row_number().over(w) + below_map)
-        .filter((F.col("rank") == k_lo) | (F.col("rank") == k_hi))
-        .groupBy("p_idx")
-        .agg(
-            F.min("o_totalprice").alias("v_lo"),
-            F.max("o_totalprice").alias("v_hi"),
-        )
-        .select(
-            "p_idx",
-            F.round(
-                F.col("v_lo") * (F.lit(1) - frac) + F.col("v_hi") * frac, 4
-            ).alias("boundary"),
-        )
-    )
-    return [r["boundary"] for r in picked.orderBy("p_idx").collect()]
 
 
 # ---------------------------------------------------------------------------
@@ -1393,8 +1231,8 @@ def a25_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cumsum would move the whole value domain to ONE partition. Instead
 # the grouped (value, count_a, count_b) relation is RANGE-repartitioned
 # on value, cumsummed locally per partition, and per-partition totals
-# are broadcast back as offsets (the w5/global_rank machinery, applied
-# to weighted sums instead of row counts). Every stage is parallel; the
+# are broadcast back as offsets (``running_totals``, the machinery under
+# global_rank, summing counts instead of rows). Every stage is parallel; the
 # only data-sized shuffles are the groupBy(value) and the range
 # exchange, both on the (much smaller) distinct-value domain. All
 # cumulative counts are integers, so the D statistic is
@@ -1426,12 +1264,9 @@ GROUP BY t.na, t.nb
 """,
 )
 def a26_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     # NULL values have no place in a CDF — and Spark's ascending window
     # sorts NULL FIRST where DuckDB's sorts it LAST, so one NULL in
-    # events.value would silently shift every cumulative prefix between
-    # the engines (round-6 advisor finding). Filter on BOTH sides.
+    # events.value would shift every cumulative prefix between engines.
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1444,64 +1279,21 @@ def a26_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("__ia"), 1)).alias("a"),
         F.count(F.when(~F.col("__ia"), 1)).alias("b"),
     )
-    # Distributed cumulative sum (no single-partition window): range
-    # shuffle on value, local cumsum, broadcast per-partition offsets.
-    # localCheckpoint pins the ranged relation so the offsets pass
-    # reads cached blocks instead of repeating the range exchange
-    # (range boundaries are sampled, so Catalyst cannot reuse them).
-    keyed = (
-        g.repartitionByRange(32, "value")
-        .withColumn("__p", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("__p").orderBy("value")
-    local = keyed.select(
-        "__p",
-        F.sum("a").over(w).alias("__la"),
-        F.sum("b").over(w).alias("__lb"),
-    )
-    psums = keyed.groupBy("__p").agg(
-        F.sum("a").alias("__pa"), F.sum("b").alias("__pb")
-    )
-    prior = psums.select(
-        F.col("__p").alias("__p2"),
-        F.col("__pa").alias("__pa2"),
-        F.col("__pb").alias("__pb2"),
-    )
-    # Triangular join over <= 32 per-partition rows — bounded by
-    # construction, never data-sized (global_rank precedent).
-    offsets = (
-        psums.join(F.broadcast(prior), F.col("__p2") < F.col("__p"), "left")
-        .groupBy("__p")
-        .agg(
-            F.coalesce(F.sum("__pa2"), F.lit(0)).alias("__offa"),
-            F.coalesce(F.sum("__pb2"), F.lit(0)).alias("__offb"),
-        )
-    )
-    totals = psums.agg(
-        F.sum("__pa").alias("__ta"), F.sum("__pb").alias("__tb")
-    )
-    # nullif-guarded denominators (r13 campaign, seed 20260818): a
-    # corpus where only ONE event class occurs (e.g. a single 'click'
-    # row) makes __ta or __tb zero, and Spark's ANSI division raises
+    cum, totals = running_totals(g, ["value"], {"__ca": "a", "__cb": "b"})
+    # nullif-guarded denominators: a corpus where only ONE event class
+    # occurs makes __ta or __tb zero, and Spark's ANSI division raises
     # DIVIDE_BY_ZERO where DuckDB's returns NULL — the oracle emits
-    # (ks_d=NULL, n_click, n_view) for that shape. x/NULL is NULL on
-    # both engines, so nullif reproduces DuckDB exactly; when both
-    # classes exist (every fixed-SF corpus) the guard passes the
-    # nonzero total through and every value is bit-identical.
-    diff = (
-        local.join(F.broadcast(offsets), "__p")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            (
-                (F.col("__la") + F.col("__offa")).cast("double")
-                / F.nullif(F.col("__ta"), F.lit(0))
-                - (F.col("__lb") + F.col("__offb")).cast("double")
-                / F.nullif(F.col("__tb"), F.lit(0))
-            ).alias("__d"),
-            "__ta",
-            "__tb",
-        )
+    # (ks_d=NULL, n_click, n_view) for that shape, and x/NULL is NULL on
+    # both engines.
+    diff = cum.crossJoin(
+        F.broadcast(totals.toDF("__ta", "__tb"))
+    ).select(
+        (
+            F.col("__ca").cast("double") / F.nullif(F.col("__ta"), F.lit(0))
+            - F.col("__cb").cast("double") / F.nullif(F.col("__tb"), F.lit(0))
+        ).alias("__d"),
+        "__ta",
+        "__tb",
     )
     return diff.groupBy("__ta", "__tb").agg(
         F.round(F.max(F.abs(F.col("__d"))), 6).alias("ks_d")

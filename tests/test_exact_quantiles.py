@@ -1,110 +1,95 @@
-"""Property tests for the bracket-then-select exact quantile family
-(a20/a21/a22): randomized distributions INCLUDING heavy ties — the case
-where the percentile_approx bracket collapses onto a single repeated
-value and the rank bookkeeping must still pick the true order
-statistics."""
+"""Property tests for the bracket-then-select kernel behind the exact
+quantile family (a20/a21/a22/a24): randomized distributions INCLUDING
+heavy ties — where the percentile_approx bracket collapses onto a
+single repeated value and the rank bookkeeping must still pick the
+true order statistics — groups too small to bracket, and NULLs."""
 
 from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+import duckdb
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
+
+from lens_warehouse_spark.operators.aggregates import exact_quantiles
 
 
-def _quantile_cont(values: list[float], p: float) -> float:
-    """Reference quantile_cont: linear interpolation at h=(n-1)p."""
-    s = sorted(values)
+def _quantile_cont(values: list[float | None], p: float) -> float | None:
+    """Reference quantile_cont, rounded to 4: linear interpolation at
+    h=(n-1)p over the non-null values; None when there are none."""
+    s = sorted(v for v in values if v is not None)
+    if not s:
+        return None
     h = (len(s) - 1) * p
     lo = math.floor(h)
     hi = math.ceil(h)
-    return s[lo] * (hi - h if hi != lo else 1.0) + (
-        s[hi] * (h - lo) if hi != lo else 0.0
+    return round(
+        s[lo] * (hi - h if hi != lo else 1.0) + (s[hi] * (h - lo) if hi != lo else 0.0),
+        4,
     )
 
 
-# values drawn from a SMALL integer domain -> massive ties by design
+def _sized_lists(elements, lo: int, hi: int):
+    """Lists whose length is drawn uniformly from [lo, hi], so sizes past
+    the tiny-group guard (margin 0.05: n < 40 takes the whole group)
+    are drawn as often as the small ones."""
+    return st.integers(min_value=lo, max_value=hi).flatmap(
+        lambda n: st.lists(elements, min_size=n, max_size=n)
+    )
+
+
+# values drawn from a SMALL integer domain -> massive ties by design,
+# plus NULLs (counted in n, not in the quantile); group sizes span the
+# tiny-group guard and real brackets, with 1- and 2-row groups always drawn
+_tied = st.one_of(st.none(), st.integers(min_value=-5, max_value=5).map(float))
 _tied_groups = st.dictionaries(
-    st.sampled_from(["a", "b", "c"]),
-    st.lists(
-        st.integers(min_value=-5, max_value=5).map(float),
-        min_size=1,
-        max_size=60,
-    ),
-    min_size=1,
-    max_size=3,
+    st.sampled_from(["a", "b", "c"]), _sized_lists(_tied, 3, 300), max_size=3
 )
+# one fixed draw with every group past the guard
+_BIG_GROUPS = {g: [float((i * k) % 11 - 5) for i in range(300)] for g, k in (("a", 7), ("b", 3))}
 
 
 @settings(max_examples=12, deadline=None)
-@given(_tied_groups)
-def test_grouped_bracket_select_median_matches_reference(spark, groups):
-    from pyspark.sql import Window
-
-    rows = [
-        (g, v) for g, vals in groups.items() for v in vals
-    ]
-    ev = spark.createDataFrame(rows, ["event_type", "value"])
-    # inline a21's machinery against the in-memory frame
-    stats = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.percentile_approx("value", 0.47, 50_000).alias("lo"),
-        F.percentile_approx("value", 0.53, 50_000).alias("hi"),
-    )
-    below = (
-        ev.join(F.broadcast(stats.select("event_type", "lo")), "event_type")
-        .filter(F.col("value") < F.col("lo"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_below"))
-    )
-    sliced = ev.join(F.broadcast(stats), "event_type").filter(
-        (F.col("value") >= F.col("lo")) & (F.col("value") <= F.col("hi"))
-    )
-    w = Window.partitionBy("event_type").orderBy("value")
-    ranked = (
-        sliced.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(below), "event_type", "left")
-        .withColumn("rank", F.col("rn") + F.coalesce(F.col("n_below"), F.lit(0)))
-    )
-    picked = ranked.filter(
-        (F.col("rank") == F.floor((F.col("n") + 1) / 2))
-        | (F.col("rank") == F.floor(F.col("n") / 2) + 1)
-    )
+@given(_tied_groups, _tied, st.lists(_tied, min_size=2, max_size=2))
+@example({**_BIG_GROUPS, "c": [None, None, 4.0]}, None, [1.0, 2.0])
+def test_grouped_quantiles_match_reference(spark, groups, one, two):
+    groups = {**groups, "one": [one], "two": two}
+    ps = (0.5, 0.9)
+    rows = [(g, v) for g, vals in groups.items() for v in vals]
+    df = spark.createDataFrame(rows, "g string, value double")
     got = {
-        r.event_type: r.med
-        for r in picked.groupBy("event_type")
-        .agg(F.avg("value").alias("med"))
-        .collect()
+        (r.g, r.p_idx): (r.q, r.n)
+        for r in exact_quantiles(df, "value", ps, keys=("g",), margin=0.05).collect()
     }
-    for g, vals in groups.items():
-        assert abs(got[g] - _quantile_cont(vals, 0.5)) < 1e-9, (
-            g,
-            sorted(vals),
-            got[g],
-        )
+    want = {
+        (g, i): (_quantile_cont(vals, p), len(vals))
+        for g, vals in groups.items()
+        for i, p in enumerate(ps)
+    }
+    assert got == want, groups
 
 
-# a24's boundary machinery: every p's boundary must equal the reference
-# quantile_cont on randomized data INCLUDING heavy ties (where brackets
-# collapse onto one repeated value).
-_tied_values = st.lists(
-    st.integers(min_value=-8, max_value=8).map(float), min_size=2, max_size=80
-)
+# a24's form: one global group, many p at once, so brackets can overlap
+# on a repeated value and every p must still see its full slice.
+_tied_values = _sized_lists(st.integers(min_value=-8, max_value=8).map(float), 1, 400)
 
 
 @settings(max_examples=10, deadline=None)
 @given(_tied_values)
-def test_exact_quantile_boundaries_match_reference(spark, values):
-    from lens_warehouse_spark.operators.aggregates import (
-        exact_quantile_boundaries,
-    )
-
+@example([float((i * 5) % 17 - 8) for i in range(400)])
+def test_global_quantiles_match_reference(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "x double")
-    ps = (0.25, 0.5, 0.9)
-    got = exact_quantile_boundaries(df, "x", ps, margin=0.05, accuracy=100_000)
-    want = [round(_quantile_cont(values, p), 4) for p in ps]
-    assert got == want, (values, got, want)
+    ps = (0.1, 0.25, 0.5, 0.9)
+    got = sorted(
+        (r.p_idx, r.q, r.n)
+        for r in exact_quantiles(df, "x", ps, margin=0.05).collect()
+    )
+    want = [
+        (i, _quantile_cont(values, p), len(values))
+        for i, p in enumerate(ps)
+    ]
+    assert got == want, values
 
 
 def test_a22_machinery_tiny_distinct_group(spark):
@@ -131,16 +116,37 @@ def test_a22_machinery_tiny_distinct_group(spark):
     assert out["b"] == 5.0
 
 
-def test_exact_quantile_boundaries_empty_input_raises(spark):
-    """Empty input must fail with a clear contract, not a NoneType
-    subscript (percentile_approx over zero rows yields NULL)."""
-    import pytest
+_EMPTY_TABLES = {
+    "customer": "c_custkey long, c_acctbal double",
+    "orders": "o_orderkey long, o_totalprice double",
+    "events": "event_id long, event_type string, value double",
+}
 
-    from lens_warehouse_spark.operators.aggregates import (
-        exact_quantile_boundaries,
-    )
 
-    with pytest.raises(ValueError, match="empty input"):
-        exact_quantile_boundaries(
-            spark.createDataFrame([], "x double"), "x", (0.5,), 0.05
-        )
+def test_family_on_empty_tables_matches_oracle(spark, tmp_path):
+    """Empty inputs take the oracle's shapes: a20 one (NULL, 0) row,
+    a21 and a24 no rows — with no driver-side special case."""
+    from lens_warehouse_spark import registry
+    from tools.check_parity import compare
+
+    registry.load_all()
+    con = duckdb.connect()
+    for t, schema in _EMPTY_TABLES.items():
+        path = f"{tmp_path}/{t}.parquet"
+        spark.createDataFrame([], schema).coalesce(1).write.parquet(path)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    shapes = {}
+    for name in (
+        "a20_exact_median",
+        "a21_grouped_exact_median",
+        "a24_equidepth_histogram",
+    ):
+        got = registry.QUERIES[name](spark, str(tmp_path)).toPandas()
+        assert not compare(name, got, con.execute(registry.ORACLES[name]).fetchdf())
+        shapes[name] = len(got)
+    con.close()
+    assert shapes == {
+        "a20_exact_median": 1,
+        "a21_grouped_exact_median": 0,
+        "a24_equidepth_histogram": 0,
+    }

@@ -7,10 +7,10 @@ of their ALGORITHM, not an accidental probe:
 
 - iterative fixed-point (PageRank, connected components, k-means/IVF
   training): the loop IS the query; Spark has no lazy iteration.
-- constant-size driver brackets (a20-family exact quantiles, KS test,
-  Zipf slope, epoch-shuffle offsets, budget thresholds): a handful of
-  scalars collected to parameterize the next pass — bounded by design,
-  never data-sized.
+- constant-size driver brackets and pinned ranges (KS test, Zipf
+  slope, epoch-shuffle offsets, budget thresholds): a handful of
+  scalars collected, or a range-partitioned relation checkpointed, to
+  parameterize the next pass — bounded by design, never data-sized.
 - staging / streaming-execute-on-build: sinks and availableNow
   streaming jobs whose RESULT is a batch frame over what the run
   produced; "building" them means running the pipeline.
@@ -46,8 +46,6 @@ BUILD_MAY_RUN_JOBS = {
     "l29b_semantic_dedup_trained",
     "l3f_ann_ivf_trained",
     # constant-size driver brackets / scalar parameter passes
-    "a20_exact_median",
-    "a24_equidepth_histogram",
     "a26_ks_test",
     "l25_zipf_slope",
     "l26_epoch_shuffle",

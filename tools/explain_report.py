@@ -17,6 +17,7 @@ Usage: python tools/explain_report.py [sf_dir] [--diff] [--save]
 
 from __future__ import annotations
 
+import hashlib
 import io
 import os
 import re
@@ -284,11 +285,37 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         ("merged read stays a single partial-aggregated pass", "HashAggregate"),
         ("no python anywhere", "!BatchEvalPython"),
     ],
-    # a20's selection runs over the global_rank pinned relation — the
-    # assertion is "distributed selection, no single-partition window
-    # and no driver-side collect in the returned plan".
+    # The exact-quantile family runs aggregates.exact_quantiles in-plan:
+    # one map-side GK sketch brackets every p, the brackets ride a
+    # broadcast to the scan, and the selection window is partitioned by
+    # (keys, p_idx) — no pinned relation, so building runs no job.
     "a20_exact_median": [
-        ("slice ranked over the pinned ranged relation", "Scan ExistingRDD"),
+        ("GK bracket sketch partially aggregated", "partial_percentile_approx("),
+        ("brackets broadcast to the scan", "BroadcastNestedLoopJoin Inner BuildRight"),
+        ("selection window partitioned by p", "windowspecdefinition(p_idx#"),
+        ("nothing pinned at build", "!Scan ExistingRDD"),
+        ("no row-at-a-time python", "!BatchEvalPython"),
+    ],
+    "a21_grouped_exact_median": [
+        ("GK bracket sketch partially aggregated", "partial_percentile_approx("),
+        ("brackets broadcast to the scan", "BroadcastHashJoin Inner BuildRight"),
+        ("selection window partitioned by (group, p)", "windowspecdefinition(event_type#"),
+        ("nothing pinned at build", "!Scan ExistingRDD"),
+        ("no row-at-a-time python", "!BatchEvalPython"),
+    ],
+    "a22_grouped_exact_percentile": [
+        ("GK bracket sketch partially aggregated", "partial_percentile_approx("),
+        ("brackets broadcast to the scan", "BroadcastHashJoin Inner BuildRight"),
+        ("selection window partitioned by (group, p)", "windowspecdefinition(event_type#"),
+        ("nothing pinned at build", "!Scan ExistingRDD"),
+        ("no row-at-a-time python", "!BatchEvalPython"),
+    ],
+    "a24_equidepth_histogram": [
+        ("GK bracket sketch partially aggregated", "partial_percentile_approx("),
+        ("brackets broadcast to the scan", "BroadcastNestedLoopJoin Inner BuildRight"),
+        ("selection window partitioned by p", "windowspecdefinition(p_idx#"),
+        ("nine deciles joined as one broadcast row", "BroadcastNestedLoopJoin Cross BuildRight"),
+        ("nothing pinned at build", "!Scan ExistingRDD"),
         ("no row-at-a-time python", "!BatchEvalPython"),
     ],
     "j12_skew_salted_join": [
@@ -591,9 +618,12 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     ],
     "l3f_ann_ivf_trained": [
         ("trained centroids broadcast", "BroadcastExchange"),
-        ("cell assignment cached", "InMemoryTableScan"),
+        ("trained codebook broadcast for assignment + certificates", "BroadcastNestedLoopJoin Cross"),
+        ("independent nearest-cell re-derivation partially aggregated", "HashAggregate"),
+        ("final assignment pinned across the certificate consumers", "InMemoryTableScan"),
         ("top-k rank pushed down", "WindowGroupLimit"),
         ("no all-pairs cartesian", "!CartesianProduct"),
+        ("no row-at-a-time python", "!BatchEvalPython"),
     ],
     "l3g_ann_lsh_multiprobe": [
         ("probe expansion is a generate, not a self-join", "Generate"),
@@ -668,12 +698,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         ("certificate row broadcast as single-row cross", "BroadcastNestedLoopJoin Cross"),
         ("column pruning to vec_id+embedding", "ReadSchema: struct<vec_id:bigint,embedding:array<float>>"),
     ],
-    "l3f_ann_ivf_trained": [
-        ("trained codebook broadcast for assignment + certificates", "BroadcastNestedLoopJoin Cross"),
-        ("independent nearest-cell re-derivation partially aggregated", "HashAggregate"),
-        ("final assignment pinned across the certificate consumers", "InMemoryTableScan"),
-        ("no row-at-a-time python", "!BatchEvalPython"),
-    ],
 }
 
 
@@ -684,16 +708,22 @@ def mask_bucket(plan: str) -> str:
 
 
 def normalize_plan(plan: str) -> str:
-    """Strip run-varying noise (expression ids, codegen stage ids, paths,
-    statistics) so two runs of an unchanged query normalize identically —
-    the unit of comparison for --diff."""
-    plan = plan.split("\n\n")[0]  # formatted-plan tree, not the node details
+    """Strip run-varying noise (expression ids, codegen stage ids, node
+    numbers, paths, checkpointed RDD ids, the session counter in Python
+    lambda variable names) so two runs of an unchanged query normalize
+    identically, whatever ran before it — the unit of comparison for --diff.
+    The operator tree stays readable for the diff; the node details
+    (expressions, schemas, partitioning) enter as a digest, so an
+    expression-only change drifts too."""
     plan = re.sub(r"#\d+L?", "#x", plan)
+    plan = re.sub(r"lambda (\w+?)_\d+#", r"lambda \1_x#", plan)
     plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=x]", plan)
     plan = re.sub(r"\[codegen id : \d+\]", "[codegen id : x]", plan)
     plan = re.sub(r"\(\d+\)", "(x)", plan)
     plan = re.sub(r"file:[^\s,\]]+", "file:x", plan)
-    return mask_bucket(plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[x]", mask_bucket(plan))
+    tree = plan.split("\n\n")[0]  # the operator tree, before the node details
+    return f"{tree}\nfull plan sha256: {hashlib.sha256(plan.encode()).hexdigest()}"
 
 
 def main() -> int:
