@@ -497,14 +497,24 @@ def train_codebook(
     return lloyd_iterates(emb, k=k, iters=iters)[iters]
 
 
-def mean_best_affinity(emb: DataFrame, codebook: DataFrame) -> float:
-    """Mean max-dot affinity of every vector to its nearest centroid —
-    the (negated) k-means objective under dot similarity."""
+def best_affinity_objective(emb: DataFrame, codebook: DataFrame) -> DataFrame:
+    """One-row frame ``(obj, n)``: the sum over every vector of its
+    max-dot affinity to the codebook — the spherical k-means objective
+    under dot similarity — and the vector count."""
     scored = emb.crossJoin(F.broadcast(codebook)).select(
-        "vec_id", F.expr(_DOT.format(a="embedding", b="centroid")).alias("aff")
+        "vec_id", dot("embedding", "centroid").alias("aff")
     )
-    best = scored.groupBy("vec_id").agg(F.max("aff").alias("best"))
-    return float(best.agg(F.avg("best")).collect()[0][0])
+    return (
+        scored.groupBy("vec_id")
+        .agg(F.max("aff").alias("best"))
+        .agg(F.sum("best").alias("obj"), F.count(F.lit(1)).alias("n"))
+    )
+
+
+def mean_best_affinity(emb: DataFrame, codebook: DataFrame) -> float:
+    """Mean max-dot affinity of every vector to its nearest centroid."""
+    obj, n = best_affinity_objective(emb, codebook).first()
+    return obj / n
 
 
 def ann_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,18 +573,6 @@ def l3f_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalization.
     iters = 3
     codebooks = lloyd_iterates(emb, k=N_CELLS, iters=iters, keep={1, iters})
-
-    def objective(codebook: DataFrame) -> DataFrame:
-        """One-row frame: (sum of per-vector best affinities, n)."""
-        scored = emb.crossJoin(F.broadcast(codebook)).select(
-            "vec_id", dot("embedding", "centroid").alias("aff")
-        )
-        return (
-            scored.groupBy("vec_id")
-            .agg(F.max("aff").alias("best"))
-            .agg(F.sum("best").alias("obj"), F.count(F.lit(1)).alias("n"))
-        )
-
     cb_last = codebooks[iters]
     assigned = pin("l3f.ivf_assigned_cert", _ivf_assign(emb, cb_last))
     # Independent nearest-cell re-derivation: max affinity per vector
@@ -602,9 +600,11 @@ def l3f_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) <= N_CELLS).alias("k_bounded_ok"),
     )
     obj = (
-        objective(codebooks[1])
+        best_affinity_objective(emb, codebooks[1])
         .select(F.col("obj").alias("obj1"), F.col("n").alias("n1"))
-        .crossJoin(objective(cb_last).select(F.col("obj").alias("objk")))
+        .crossJoin(
+            best_affinity_objective(emb, cb_last).select(F.col("obj").alias("objk"))
+        )
         .select(
             (
                 F.col("objk")

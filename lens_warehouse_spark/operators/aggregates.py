@@ -587,6 +587,22 @@ def _mg_summaries(batches):
     )
 
 
+def heavy_hitters(keys: DataFrame, k: int = _HH_K) -> DataFrame:
+    """(user_id, cnt) for every key of the one-column ``user_id`` frame
+    ``keys`` whose count exceeds n/k. ``k`` must not exceed the summary
+    capacity ``_HH_K``, or true heavy hitters can miss the candidates."""
+    candidates = keys.mapInPandas(_mg_summaries, "user_id long").distinct()
+    total = keys.groupBy().agg(F.count(F.lit(1)).alias("n_total"))
+    return (
+        keys.join(F.broadcast(candidates), "user_id", "left_semi")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .crossJoin(F.broadcast(total))
+        .filter(F.col("cnt") * k > F.col("n_total"))
+        .select("user_id", "cnt")
+    )
+
+
 @register(
     "a16_heavy_hitters",
     oracle=f"""
@@ -599,19 +615,7 @@ ORDER BY user_id
 )
 def a16_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select("user_id")
-    candidates = (
-        ev.mapInPandas(_mg_summaries, "user_id long").distinct()
-    )
-    total = ev.groupBy().agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        ev.join(F.broadcast(candidates), "user_id", "left_semi")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") * _HH_K > F.col("n_total"))
-        .select("user_id", "cnt")
-        .orderBy("user_id")
-    )
+    return heavy_hitters(ev).orderBy("user_id")
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lens_warehouse_spark.catalog import maybe_broadcast, table
-from lens_warehouse_spark.operators._helpers import epoch_ms, global_rank
+from lens_warehouse_spark.operators._helpers import epoch_ms, running_totals
 from lens_warehouse_spark.registry import register
 
 
@@ -124,13 +124,14 @@ def w4_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # W5: ntile / percent_rank / cume_dist over a GLOBAL total order. A
 # plain Window.orderBy would move the whole table to one partition
-# ("No Partition Defined for Window!"), so the rank comes from the
-# range-repartitioned global_rank helper (per-partition row_number +
-# broadcast offsets — same parallel machinery as a global sort), and
-# ntile/percent_rank/cume_dist are derived arithmetically from
-# (rank, n): the order key is unique, so rank == row_number and
-# pct_rank = (r-1)/(n-1), cume = r/n, and ntile's first (n mod k)
-# buckets carry the extra row exactly as SQL defines.
+# ("No Partition Defined for Window!"), so the rank is the running
+# count of the range-repartitioned running_totals helper (per-partition
+# row_number + broadcast offsets — same parallel machinery as a global
+# sort), n is its grand total, and ntile/percent_rank/cume_dist are
+# derived arithmetically from (rank, n): the order key is unique, so
+# rank == row_number and pct_rank = (r-1)/(n-1), cume = r/n, and
+# ntile's first (n mod k) buckets carry the extra row exactly as SQL
+# defines.
 # ---------------------------------------------------------------------------
 @register(
     "w5_distribution",
@@ -145,11 +146,10 @@ WINDOW w AS (ORDER BY c_acctbal, c_custkey)
 )
 def w5_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    ranked = global_rank(cu, ["c_acctbal", "c_custkey"], rank_col="__gr")
-    # Count the RAW input: global_rank preserves cardinality, and
-    # counting its output would re-execute the whole rank plan
-    # (range shuffle + window + offsets join) for one scalar.
-    total = cu.agg(F.count(F.lit(1)).alias("__total"))
+    # The row count is the rank's grand total, read off the pinned
+    # ranged relation: no second customer scan, no re-run rank plan.
+    ranked, totals = running_totals(cu, ["c_acctbal", "c_custkey"], {"__gr": F.lit(1)})
+    total = totals.select(F.col("__gr").alias("__total"))
     r = F.col("__gr")
     n = F.col("__total")
     k = F.lit(4)
@@ -251,7 +251,7 @@ def o5_top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded: the input is pre-filtered to o_custkey < 50 (a per-entity
 # report, constant-sized at any SF), and the point of w7 is exercising
 # the NATIVE rank functions — the scale-safe derived form over
-# unbounded inputs is w5_distribution (global_rank + arithmetic).
+# unbounded inputs is w5_distribution (running_totals + arithmetic).
 # ---------------------------------------------------------------------------
 @register(
     "w7_rank_family",

@@ -1,4 +1,5 @@
-"""Facade smoke tests: every public method returns sane results."""
+"""Facade smoke tests: every public method, and the registered queries
+reached through ``query(name)``, returns sane results."""
 
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ def test_engine_surface(spark):
     facets = lw.cohort_facets(EXAMPLE_COHORT).collect()
     assert sum(r.n_subjects for r in facets) == n
 
-    assert lw.dedup_exact().count() == 500  # all unique at sf0.001
+    assert lw.query("l1_exact_dedup").count() == 500  # all unique at sf0.001
     knn = lw.knn(0, k=5).collect()
     assert len(knn) == 5
     assert knn[0].cos >= knn[-1].cos
@@ -37,7 +38,7 @@ def test_engine_surface(spark):
     assert sess30.agg({"n_events": "sum"}).first()[0] == n_events
     with pytest.raises(ValueError):
         lw.sessionize("30 fortnights")
-    assert lw.simhashes().count() == 500
+    assert lw.query("l2c_simhash").count() == 500
 
 
 # A lineitem quantity band OR'd with a subject segment, minus an order
@@ -96,7 +97,7 @@ def test_engine_curation_surface(spark):
     assert cont7.count() != cont.count()
     with pytest.raises(ValueError):
         lw.decontaminate(bench_mod=0)  # would be ANSI DIVIDE_BY_ZERO
-    cur = lw.curate()
+    cur = lw.query("l20_curation_pipeline")
     assert cur.columns == ["lang", "source", "n_docs", "total_chars"]
     assert cur.count() > 0
 
@@ -133,7 +134,7 @@ def test_engine_sketch_layout_cdc_surface(spark):
     assert {r.change_type for r in diff.collect()} == {"D"}
     assert diff.count() == old.count() - new.count()
 
-    lm = lw.lm_score()
+    lm = lw.query("l21_bigram_lm_score")
     assert lm.columns == ["doc_id", "n_bigrams", "lm_score"]
     assert lm.count() > 0
 
@@ -201,49 +202,56 @@ def test_approx_percentile_within_rank_error(spark):
 
 def test_engine_analytics_surface(spark):
     lw = LensWarehouse(spark, SF)
-    assert lw.redact_pii().columns == [
+    assert lw.query("l22_pii_redaction").columns == [
         "doc_id", "n_emails", "n_ips", "n_phones", "red_len", "red_md5",
     ]
     # every doc got its appended synthetic PII scrubbed
-    assert lw.redact_pii().filter(
+    assert lw.query("l22_pii_redaction").filter(
         (F.col("n_emails") < 1) | (F.col("n_ips") < 1) | (F.col("n_phones") < 1)
     ).count() == 0
-    ret = lw.retention().collect()
+    ret = lw.query("t14_retention_matrix").collect()
     assert all(r.weeks_since >= 0 for r in ret)
-    attr = lw.attribute_purchases()
+    attr = lw.query("t15_attribution")
     assert attr.columns == ["purchase_id", "user_id", "click_id", "gap_ms"]
     assert attr.filter(F.col("gap_ms") < 0).count() == 0
-    prof = {r.col: r for r in lw.profile().collect()}
+    prof = {r.col: r for r in lw.query("s5c_profile").collect()}
     assert prof["c_custkey"].n_nulls == 0
-    hist = lw.scd2()
+    hist = lw.query("s8_scd2_history")
     # every key's version chain starts at snapshot 0 and ends open (999)
-    assert hist.filter(F.col("valid_from") == 0).count() == lw.table("orders").count()
-    assert lw.mmr_rerank().count() == 5
-    dau = lw.rolling_dau().collect()
+    assert hist.filter(F.col("valid_from") == 0).count() == \
+        lw.table("orders").count()
+    assert lw.query("l3j_mmr_rerank").count() == 5
+    dau = lw.query("w9_sliding_distinct").collect()
     assert all(r.dau7 > 0 for r in dau)
-    assert lw.incremental_dedup().columns == ["admit_doc_id", "content_hash"]
-    assert lw.distinct_rollup().columns == [
+    assert lw.query("l1b_incremental_dedup").columns == [
+        "admit_doc_id", "content_hash",
+    ]
+    assert lw.query("a18_hll_rollup").columns == [
         "event_type", "exact_users", "n_days", "sketch_within_rsd",
     ]
-    ov = lw.cohort_overlap().collect()
+    ov = lw.query("a19_sketch_overlap").collect()
     # r10: a19's public output is exact_overlap + ie_within_bound (the
     # inclusion-exclusion estimate is certified, not hash-compared)
     assert len(ov) == 10 and all(
         r.exact_overlap >= 0 and r.ie_within_bound for r in ov
     )
-    assert lw.epoch_shuffle().columns == ["doc_id", "epoch_pos"]
-    assert lw.budget_select().columns == ["doc_id", "n_tok", "quality", "cum_tok"]
-    assert lw.hard_negatives().columns == ["anchor_id", "neg_id", "rn", "cos"]
+    assert lw.query("l26_epoch_shuffle").columns == ["doc_id", "epoch_pos"]
+    assert lw.query("l27_budget_select").columns == [
+        "doc_id", "n_tok", "quality", "cum_tok",
+    ]
+    assert lw.query("l3k_hard_negatives").columns == [
+        "anchor_id", "neg_id", "rn", "cos",
+    ]
 
 
-def test_engine_round4_surface(spark):
+def test_engine_percentile_skew_join_and_transit_cohort(spark):
     from lens_warehouse_spark.engine import LensWarehouse
 
     lw = LensWarehouse(spark, "/root/testdata/sf0.001")
-    p90 = lw.grouped_exact_percentile()
+    p90 = lw.query("a22_grouped_exact_percentile")
     assert p90.columns == ["event_type", "p90_value", "n"]
     assert p90.count() == 5
-    sj = lw.skewed_join()
+    sj = lw.query("j12_skew_salted_join")
     assert sj.columns == ["c_mktsegment", "n_orders", "total_price_cents"]
     q = lw.cohort_from_transit(
         '["^ ","~:include",[[["^ ","~:type","~:order",'
@@ -252,42 +260,42 @@ def test_engine_round4_surface(spark):
     assert lw.cohort_count(q).collect()[0][0] > 0
 
 
-def test_engine_round4b_surface(spark):
+def test_engine_corpus_and_embedding_statistics(spark):
     lw = LensWarehouse(spark, SF)
     sd = lw.substring_dedup()
     assert {"n_windows", "n_dup_windows", "dup_frac"} <= set(sd.columns)
-    gm = lw.gram_matrix()
+    gm = lw.query("l32_gram_matrix")
     assert gm.count() == 64 * 65 // 2  # upper triangle of d x d
     pcs = lw.pca_project()
     assert pcs.columns[0] == "vec_id" and len(pcs.columns) == 9
-    mode = lw.grouped_mode().collect()
+    mode = lw.query("a23_grouped_mode").collect()
     assert all(r["cnt"] >= 1 for r in mode[:5])
-    idx = lw.inverted_index()
+    idx = lw.query("l34_inverted_index")
     assert {"term", "shard", "df_shard", "postings"} == set(idx.columns)
-    mw = lw.mixture_weights().toPandas()
+    mw = lw.query("l36_mixture_weights").toPandas()
     assert abs(mw["weight"].sum() - 1.0) < 1e-4  # weights normalize
     cent = lw.centrality()
     assert {"vec_id", "cell_id", "rank", "cell_rank"} == set(cent.columns)
-    anom = lw.anomaly_scores()
+    anom = lw.query("t19_anomaly_zscore")
     assert {"win_start_ms", "event_type", "n", "z"} == set(anom.columns)
 
 
-def test_engine_round4c_surface(spark):
+def test_engine_ranking_temporal_and_spatial_queries(spark):
     lw = LensWarehouse(spark, SF)
-    top = lw.bm25().collect()
+    top = lw.query("l37_bm25").collect()
     assert len(top) <= 20 and all(r["bm25"] > 0 for r in top)
-    bins = lw.equidepth_histogram().toPandas()
+    bins = lw.query("a24_equidepth_histogram").toPandas()
     assert bins["n_rows"].sum() == lw.table("orders").count()
-    conc = lw.max_concurrency().toPandas()
+    conc = lw.query("t21_max_concurrency").toPandas()
     assert (conc["max_concurrent"] >= 1).all()
-    assert lw.washout_cohort().count() >= 0
-    streaks = lw.longest_streaks().toPandas()
+    assert lw.query("u7_washout_cohort").count() >= 0
+    streaks = lw.query("w10_longest_streak").toPandas()
     assert (streaks["longest_streak"] >= 1).all()
-    roll = lw.subtree_rollup().toPandas().set_index("node")
+    roll = lw.query("g1_subtree_rollup").toPandas().set_index("node")
     # subtree counts are monotone up the chain: parent >= child
     child = roll.index[roll.index >= 2][0]
     assert roll.loc[child // 2, "n_events_subtree"] >= roll.loc[child, "n_events_subtree"]
-    assert {"id_a", "id_b", "dist2"} == set(lw.spatial_join().columns)
+    assert {"id_a", "id_b", "dist2"} == set(lw.query("g2_spatial_join").columns)
 
 
 def test_engine_round5_guards(spark):
@@ -356,6 +364,19 @@ def test_heavy_hitters_k_capacity_guard(spark):
         lw.heavy_hitters(k=10_000)
     with pytest.raises(TypeError, match="integer key"):
         lw.heavy_hitters("events", key="event_type")
+
+
+def test_heavy_hitters_facade_matches_a16(spark):
+    """The facade and the registered a16 run the same kernel: same rows."""
+    lw = LensWarehouse(spark, SF)
+    facade = sorted(tuple(r) for r in lw.heavy_hitters().collect())
+    assert facade
+    assert facade == [tuple(r) for r in lw.query("a16_heavy_hitters").collect()]
+
+
+def test_query_unknown_name_raises(spark):
+    with pytest.raises(KeyError):
+        LensWarehouse(spark, SF).query("no_such_query")
 
 
 def test_snapshot_diff_null_transitions(spark):

@@ -51,3 +51,30 @@ def _native(spark, data, k=4):
 def test_derived_rank_family_matches_native(spark, n):
     data = [(i, (i * 7) % 5) for i in range(n)]
     assert _derived(spark, data) == _native(spark, data)
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 5])
+def test_registered_w5_matches_oracle_on_tiny_customer_tables(spark, tmp_path, n):
+    """The registered query reads n off its rank's totals: an empty
+    table gives no rows and a single customer gets pct_rank 0."""
+    import duckdb
+
+    from lens_warehouse_spark import registry
+
+    registry.load_all()
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(i, float((i * 7) % 3)) for i in range(1, n + 1)],
+        "c_custkey long, c_acctbal double",
+    ).coalesce(1).write.parquet(f"{sf}/customer.parquet")
+    got = sorted(
+        tuple(r) for r in registry.QUERIES["w5_distribution"](spark, sf).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW customer AS SELECT * FROM "
+        f"read_parquet('{sf}/customer.parquet/*.parquet')"
+    )
+    want = sorted(con.execute(registry.ORACLES["w5_distribution"]).fetchall())
+    assert got == want
+    assert len(got) == n
